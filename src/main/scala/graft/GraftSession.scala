@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.streaming.LocalCheckpointFileManager
+
 /** The ENGINE's shared local-session base — one place for the tuned
   * defaults every harness main (Bench, Verify, TimeOne, the AB
   * harnesses, StreamBench, Soak, PlanDump, PhaseProbe) runs with, so
@@ -10,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * preference that lives only in the bench harness makes the benchmark
   * and the oracle run different planners).
   *
-  * Tuned defaults and why (all env-overridable):
+  * Tuned defaults and why (env-overridable unless noted):
   *  - `spark.shuffle.sort.bypassMergeThreshold=8` + tmpfs
   *    `spark.local.dir`: the bypass-merge shuffle writer creates R
   *    files per map task and this VM's file-create path turns
@@ -27,6 +29,15 @@ import org.apache.spark.sql.SparkSession
   *    net -3.7% over the 32-query subset in r18). Scale-safe: AQE skew
   *    split still applies to SHJ and the per-partition build side
   *    shrinks as partition count grows with the data.
+  *  - `spark.sql.streaming.checkpointFileManagerClass` =
+  *    [[graft.streaming.LocalCheckpointFileManager]] (constant, not
+  *    env-overridable): without the native Hadoop library, Spark's
+  *    local checkpoint writes shell out to `chmod` and `readlink` for
+  *    every file. A webhook micro-batch writes seven (offsets, commit,
+  *    state deltas): 298 ms of state commit and 34 ms of offset log
+  *    per batch on a 4-vCPU VM, against 8 ms and 1 ms through
+  *    java.nio (SCALING.md, "Webhook micro-batch fixed cost").
+  *    Non-local schemes keep Spark's own path.
   *
   * Master is `local[$SPARK_GRAFT_CPUS]` with shuffle partitions = the
   * core count (the driver contract: it re-runs the bench at a lower
@@ -39,6 +50,11 @@ object GraftSession {
     * historical 4 — correctness runs don't need width). */
   def cpus(default: String): String =
     sys.env.getOrElse("SPARK_GRAFT_CPUS", default)
+
+  /** The checkpoint file manager every engine session streams with. */
+  val checkpointManagerConf: (String, String) =
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[LocalCheckpointFileManager].getName
 
   /** The shared builder. Callers append main-specific confs (e.g.
     * StreamBench's RocksDB state store) before `getOrCreate()`. */
@@ -55,5 +71,6 @@ object GraftSession {
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .config("spark.sql.join.preferSortMergeJoin",
         sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
+      .config(checkpointManagerConf._1, checkpointManagerConf._2)
   }
 }

@@ -17,7 +17,7 @@ import graft.plans.GraftExtensions
   * agent fallback chain P4, deterministic event id P5, notes P6,
   * dedup key P7, outbound filter F1, metric classification F2 with
   * unknown→drop, HubSpot scaffold + metric mapping P12, source
-  * routing F4 as a partitioned union.
+  * routing F4 as a single pass over the envelopes.
   */
 object Adapters {
 
@@ -72,38 +72,69 @@ object Adapters {
       .when(tpe === 1, lit("CALLS"))
       .otherwise(lit(null).cast("string"))
 
-  /** Aloware webhook → FactEvent rows (≤1 per envelope). */
-  def aloware(envelopes: DataFrame): DataFrame = {
-    GraftExtensions.register(envelopes.sparkSession)
-    val name = lower(coalesce(col("j.parsedBody.event"), col("j.event"), lit("")))
+  /** One JSON parse per envelope: every accepted payload shape fits
+    * the Aloware body schema (HubSpot's fields are a subset of it). */
+  private def parsed(envelopes: DataFrame): DataFrame =
+    envelopes.withColumn("j", from_json(col("body"), Schemas.alowareBody))
+
+  private val eventName: Column =
+    lower(coalesce(col("j.parsedBody.event"), col("j.event"), lit("")))
+
+  /** Appends P7's dedup key to FactEvent rows. */
+  private def withDedupKey(facts: DataFrame): DataFrame =
+    facts.withColumn("dedupKey", concat_ws(":", col("source"), col("eventId")))
+
+  /** Aloware's F1/F2 gate over a parsed envelope: outbound, and a
+    * known metric. */
+  private def alowareKeeps: Column =
+    isOutbound(eventName, p("direction")) && inferMetric(eventName, p("type")).isNotNull
+
+  /** Aloware's FactEvent columns over a parsed envelope, by name. */
+  private def alowareColumns: Seq[(String, Column)] = {
     val tzRaw = p("contact").getField("timezone")
     val eventTime = coalesce(parseCreatedAt(p("created_at")), col("receivedAt"))
     val agentId = coalesce(p("owner_id").cast("string"),
       p("user_id").cast("string"), lit("unknown"))
-    envelopes
-      .withColumn("j", from_json(col("body"), Schemas.alowareBody))
-      .withColumn("name", name)
-      .withColumn("metricId", inferMetric(col("name"), p("type")))
-      .filter(isOutbound(col("name"), p("direction")) && col("metricId").isNotNull)
-      .select(
-        // P5 id chain ends in the delivery-id header BEFORE the
-        // receive time: a redelivered webhook keeps its delivery id
-        // but gets a new receivedAt, so the header keeps retried
-        // no-payload-id events deduplicable (P7 keys off eventId).
-        concat(lit("ALOWARE:"), coalesce(p("id").cast("string"), p("uuid_v4"),
-          deliveryId,
-          unix_millis(col("receivedAt")).cast("string"))).as("eventId"),
-        agentId.as("agentId"),
-        call_function("graft_date_key", eventTime, coalesce(tzRaw, lit("UTC")))
-          .cast("date").as("factDateKey"),
-        col("metricId"),
-        concat_ws(";",
-          concat(lit("event="), col("name")),
-          when(tzRaw.isNotNull, concat(lit("tz="), tzRaw)),
-          when(deliveryId.isNotNull, concat(lit("delivery="), deliveryId)),
-          when(agentId === "unknown", lit("agent=unknown"))).as("notes"),
-        col("source"), col("receivedAt"))
-      .withColumn("dedupKey", concat_ws(":", col("source"), col("eventId")))
+    Seq(
+      // P5 id chain ends in the delivery-id header BEFORE the
+      // receive time: a redelivered webhook keeps its delivery id
+      // but gets a new receivedAt, so the header keeps retried
+      // no-payload-id events deduplicable (P7 keys off eventId).
+      "eventId" -> concat(lit("ALOWARE:"), coalesce(p("id").cast("string"),
+        p("uuid_v4"), deliveryId, unix_millis(col("receivedAt")).cast("string"))),
+      "agentId" -> agentId,
+      "factDateKey" -> call_function("graft_date_key", eventTime,
+        coalesce(tzRaw, lit("UTC"))).cast("date"),
+      "metricId" -> inferMetric(eventName, p("type")),
+      "notes" -> concat_ws(";",
+        concat(lit("event="), eventName),
+        when(tzRaw.isNotNull, concat(lit("tz="), tzRaw)),
+        when(deliveryId.isNotNull, concat(lit("delivery="), deliveryId)),
+        when(agentId === "unknown", lit("agent=unknown"))),
+      "source" -> col("source"),
+      "receivedAt" -> col("receivedAt"))
+  }
+
+  /** HubSpot's FactEvent columns over a parsed envelope, by name (the
+    * same names as [[alowareColumns]]). */
+  private def hubspotColumns: Seq[(String, Column)] = Seq(
+    "eventId" -> concat(lit("HUBSPOT:"), coalesce(p("id").cast("string"),
+      deliveryId, unix_millis(col("receivedAt")).cast("string"))),
+    "agentId" -> lit("unknown@hubspot"),
+    "factDateKey" -> col("receivedAt").cast("date"),
+    "metricId" -> coalesce(element_at(typedLit(hubspotToMetric), eventName),
+      lit("EMAILS")),
+    "notes" -> lit("example event (scaffold)"),
+    "source" -> col("source"),
+    "receivedAt" -> col("receivedAt"))
+
+  private def named(cols: Seq[(String, Column)]): Seq[Column] =
+    cols.map { case (n, c) => c.as(n) }
+
+  /** Aloware webhook → FactEvent rows (≤1 per envelope). */
+  def aloware(envelopes: DataFrame): DataFrame = {
+    GraftExtensions.register(envelopes.sparkSession)
+    withDedupKey(parsed(envelopes).filter(alowareKeeps).select(named(alowareColumns): _*))
   }
 
   /** HubSpot webhook → FactEvent rows. The reference adapter is a
@@ -111,28 +142,26 @@ object Adapters {
     * (`src/adapters/hubspot.adapter.ts`); we honor that default but
     * apply the declared name→metric mapping (P12) when the payload
     * carries a recognizable event name. */
-  def hubspot(envelopes: DataFrame): DataFrame = {
-    val name = lower(coalesce(col("j.parsedBody.event"), col("j.event"), lit("")))
-    val metricMap = typedLit(hubspotToMetric)
-    envelopes
-      .withColumn("j", from_json(col("body"), Schemas.alowareBody))
-      .select(
-        concat(lit("HUBSPOT:"), coalesce(p("id").cast("string"),
-          deliveryId,
-          unix_millis(col("receivedAt")).cast("string"))).as("eventId"),
-        lit("unknown@hubspot").as("agentId"),
-        col("receivedAt").cast("date").as("factDateKey"),
-        coalesce(element_at(metricMap, name), lit("EMAILS")).as("metricId"),
-        lit("example event (scaffold)").as("notes"),
-        col("source"), col("receivedAt"))
-      .withColumn("dedupKey", concat_ws(":", col("source"), col("eventId")))
-  }
+  def hubspot(envelopes: DataFrame): DataFrame =
+    withDedupKey(parsed(envelopes).select(named(hubspotColumns): _*))
 
-  /** F4: route by source and union the per-source outputs — the
-    * orchestrator's adapter dispatch as a partitioned union
-    * (SURVEY §2.3 F4, §2.7 O2). Unknown sources are dropped (the
-    * entrypoints 400 them before the dataflow). */
-  def route(envelopes: DataFrame): DataFrame =
-    aloware(envelopes.filter(upper(col("source")) === "ALOWARE"))
-      .unionByName(hubspot(envelopes.filter(upper(col("source")) === "HUBSPOT")))
+  /** F4: route by source — the orchestrator's adapter dispatch
+    * (SURVEY §2.3 F4, §2.7 O2) as a single pass: each envelope is
+    * parsed once, kept by its own source's gate, and every output
+    * column picks its source's expression, so the result equals
+    * `aloware(ALOWARE rows) ∪ hubspot(HUBSPOT rows)` from one scan of
+    * the input. Unknown sources are dropped (the entrypoints 400 them
+    * before the dataflow). */
+  def route(envelopes: DataFrame): DataFrame = {
+    GraftExtensions.register(envelopes.sparkSession)
+    val source = upper(col("source"))
+    val isAloware = source === "ALOWARE"
+    val hubspotByName = hubspotColumns.toMap
+    val columns = alowareColumns.map { case (n, a) =>
+      when(isAloware, a).otherwise(hubspotByName(n)).as(n)
+    }
+    withDedupKey(parsed(envelopes)
+      .filter(when(isAloware, alowareKeeps).otherwise(source === "HUBSPOT"))
+      .select(columns: _*))
+  }
 }

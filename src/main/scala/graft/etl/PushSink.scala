@@ -44,9 +44,10 @@ object PushSink {
 
   /** Token bucket, applied PER PARTITION on the executor: a partition
     * may burst `burst` requests, then is paced at requestsPerSec.
-    * The effective global rate is numPartitions × requestsPerSec —
-    * size `numPartitions` in [[pushBatch]] for the sink's documented
-    * API budget (e.g. a 120 req/min API: 4 partitions × 0.5 req/s). */
+    * The effective global rate is at most numPartitions ×
+    * requestsPerSec — size `numPartitions` in [[pushBatch]] for the
+    * sink's documented API budget (e.g. a 120 req/min API: 4
+    * partitions × 0.5 req/s). */
   final case class RateLimit(requestsPerSec: Double, burst: Int = 1)
       extends Serializable {
     require(requestsPerSec > 0 && burst >= 1, "rate and burst must be positive")
@@ -67,8 +68,11 @@ object PushSink {
     * exponential retry and an optional per-partition token-bucket
     * rate cap (every attempt — retries included — pays a token, so a
     * flapping sink is never hammered above the cap). Returns rows
-    * pushed. `numPartitions` defaults to the cluster parallelism and
-    * doubles as the global rate knob (see [[RateLimit]]). */
+    * pushed. `numPartitions` (default: the cluster parallelism) caps
+    * the number of pusher tasks rather than setting it: a batch with
+    * at most that many partitions is pushed from its own partitions,
+    * with no shuffle, and only a wider one is repartitioned down to
+    * it. The cap doubles as the global rate knob (see [[RateLimit]]). */
   def pushBatch(
       facts: DataFrame, pusher: RowPusher, table: String = "FactEvent",
       chunkSize: Int = 100,
@@ -80,9 +84,12 @@ object PushSink {
     val sink = toSinkColumns(facts)
     val parts = numPartitions.getOrElse(
       math.max(1, facts.sparkSession.sparkContext.defaultParallelism))
-    val pushed = sink.select(to_json(struct(sink.columns.map(col): _*)).as("j"))
-      .repartition(parts)
-    val counts = pushed.rdd.mapPartitions { it =>
+    val rows = sink.select(to_json(struct(sink.columns.map(col): _*)).as("j"))
+      .rdd.map(_.getString(0))
+    // repartitioned on the RDD: with AQE, `.rdd` has already run the
+    // plan's shuffle stages, which a second Dataset would run again
+    val pushed = if (rows.getNumPartitions > parts) rows.repartition(parts) else rows
+    val counts = pushed.mapPartitions { it =>
       // token bucket state, one per partition-task
       var tokens = rateLimit.map(_.burst.toDouble).getOrElse(0.0)
       var lastRefill = pacer.nowNanos
@@ -118,7 +125,7 @@ object PushSink {
         }
       }
       var n = 0L
-      it.map(_.getString(0)).grouped(chunkSize).foreach { chunk =>
+      it.grouped(chunkSize).foreach { chunk =>
         pushWithRetry(chunk.toSeq); n += chunk.size
       }
       Iterator.single(n)

@@ -17,7 +17,9 @@ object RosterGate {
   def apply(events: DataFrame, roster: Option[DataFrame]): DataFrame =
     roster match {
       case Some(r) =>
-        val ids = r.select(col("id").cast("string").as("agentId")).distinct()
+        // no distinct(): a semi join only tests that a key exists, so
+        // duplicate roster ids cannot change its output
+        val ids = r.select(col("id").cast("string").as("agentId"))
         events.join(broadcast(ids), Seq("agentId"), "left_semi")
       case None => events // fail-open
     }

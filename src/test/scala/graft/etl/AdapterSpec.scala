@@ -3,12 +3,14 @@ package graft.etl
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions.{col, upper}
 
 import graft.SparkSpec
 
 /** Adapter behaviors from FIXTURES.md §1 / SURVEY §2.2-2.3 — every
   * edge case the reference's code paths encode. */
-class AdapterSpec extends SparkSpec {
+class AdapterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val recv = "2025-11-05T17:30:00Z"
@@ -154,12 +156,48 @@ class AdapterSpec extends SparkSpec {
     cased.getAs[String]("eventId") shouldBe "HUBSPOT:11"
   }
 
-  test("route unions per-source outputs and drops unknown sources (F4)") {
+  test("route dispatches each envelope by source and drops unknown sources (F4)") {
     val both = env(canonical)
       .union(env("""{}""", "HUBSPOT"))
       .union(env("""{}""", "MYSTERY"))
     val out = Adapters.route(both)
     out.count() shouldBe 2
     out.select("source").as[String].collect().sorted shouldBe Array("ALOWARE", "HUBSPOT")
+  }
+
+  test("route equals the per-source adapters on their rows, from one scan (F4)") {
+    val hdr = "map('X-Delivery-Id','dlv-7')"
+    val rows = Seq(
+      ("ALOWARE", "map('x','y')", canonical),
+      ("ALOWARE", hdr, """{"event":"outbound_text","body":{"id":21,"created_at":"2025-11-05 10:00:00","owner_id":1}}"""),
+      ("ALOWARE", "map()", """{"event":"outbound_call","created_at":"2025-11-05T10:00:00Z","user_id":2,"type":1}"""),
+      ("ALOWARE", "map()", """{"event":"inbound_call","body":{"id":22,"direction":2,"type":1}}"""),
+      ("ALOWARE", "map()", """{"event":"outbound_meeting","body":{"id":23,"direction":2}}"""),
+      ("HUBSPOT", "map()", """{"event":"case_created","id":24}"""),
+      ("HUBSPOT", hdr, """{}"""),
+      ("aloware", "map()", """{"event":"outbound_call","body":{"id":25,"owner_id":3}}"""),
+      ("MYSTERY", "map()", """{"event":"outbound_call","body":{"id":26,"owner_id":4}}"""))
+    val dir = java.nio.file.Files.createTempDirectory("graft-route").resolve("env").toString
+    rows.map { case (source, headers, body) =>
+      Seq((source, body, Timestamp.from(java.time.Instant.parse(recv))))
+        .toDF("source", "body", "receivedAt")
+        .selectExpr("source", s"$headers AS headers", "body", "receivedAt")
+    }.reduce(_ unionByName _).write.parquet(dir)
+    val x = spark.read.parquet(dir)
+
+    val routed = Adapters.route(x)
+    val perSource =
+      Adapters.aloware(x.filter(upper(col("source")) === "ALOWARE"))
+        .unionByName(Adapters.hubspot(x.filter(upper(col("source")) === "HUBSPOT")))
+    val got = routed.collect().toSeq
+    got should contain theSameElementsAs perSource.collect().toSeq
+    // inbound, unknown-event and unknown-source rows are dropped
+    val epochMs = java.time.Instant.parse(recv).toEpochMilli
+    got.map(_.getAs[String]("eventId")) should contain theSameElementsAs Seq(
+      "ALOWARE:719285063", "ALOWARE:21", s"ALOWARE:$epochMs",
+      "HUBSPOT:24", "HUBSPOT:dlv-7", "ALOWARE:25")
+    routed.columns.toSeq shouldBe perSource.columns.toSeq
+
+    collectLeaves(routed.queryExecution.executedPlan) should have size 1
   }
 }

@@ -31,6 +31,16 @@ object AlwaysFailPusher extends PushSink.RowPusher {
   }
 }
 
+/** Records which task pushed each row: (partitionId, taskAttemptId, EventID). */
+object TaskRecordingPusher extends PushSink.RowPusher {
+  val rows = new ConcurrentLinkedQueue[(Int, Long, String)]()
+  override def push(table: String, chunk: Seq[String]): Unit = {
+    val tc = org.apache.spark.TaskContext.get()
+    chunk.foreach(j => rows.add((tc.partitionId, tc.taskAttemptId,
+      j.split("\"EventID\":\"")(1).split("\"")(0))))
+  }
+}
+
 /** Virtual time: sleeps advance the clock instead of blocking. */
 object VirtualPacer extends PushSink.Pacer {
   val now = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -119,6 +129,33 @@ class PushSinkSpec extends SparkSpec {
     sleeps.size shouldBe 4
     all(sleeps) shouldBe 500L +- 1
     VirtualPacer.now.get should be >= 2000L * 1000000L
+  }
+
+  private def pushedByTask(batch: org.apache.spark.sql.DataFrame, parts: Int) = {
+    TaskRecordingPusher.rows.clear()
+    PushSink.pushBatch(batch, TaskRecordingPusher, chunkSize = 5,
+      numPartitions = Some(parts)) shouldBe batch.count()
+    scala.jdk.CollectionConverters.CollectionHasAsScala(TaskRecordingPusher.rows)
+      .asScala.toSeq
+  }
+
+  test("a batch with fewer partitions than numPartitions is pushed from its own partitions") {
+    val batch = facts(30).coalesce(2)
+    val home = batch.rdd.mapPartitionsWithIndex { (i, it) =>
+      it.map(r => (i, r.getAs[String]("eventId")))
+    }.collect().toSeq
+    home.map(_._1).distinct should have size 2
+    pushedByTask(batch, parts = 4).map { case (p, _, id) => (p, id) } should
+      contain theSameElementsAs home
+  }
+
+  test("a batch wider than numPartitions is pushed by at most that many tasks") {
+    val batch = facts(40).repartition(8)
+    batch.rdd.getNumPartitions shouldBe 8
+    val pushed = pushedByTask(batch, parts = 2)
+    pushed.map(_._3).sorted shouldBe (1 to 40).map(i => s"E:$i").sorted
+    pushed.map(_._1).distinct.size should be <= 2
+    pushed.map(_._2).distinct.size should be <= 2
   }
 
   test("K5 createStarTables is idempotent and queryable") {
