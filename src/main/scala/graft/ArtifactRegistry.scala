@@ -124,7 +124,7 @@ object ArtifactRegistry {
 
   /** JVM-unique component baked into every durable artifact name so
     * two processes sharing a warehouse/tmp over the SAME corpus dir
-    * (e.g. Bench and Soak on one machine) never DROP/rewrite each
+    * (e.g. Bench and Verify on one machine) never DROP/rewrite each
     * other's tables or serving files mid-query. The cost is that
     * durable artifacts are process-scoped: a crashed process leaves
     * its dirs behind (normal exit reclaims them via the

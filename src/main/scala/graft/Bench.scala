@@ -25,6 +25,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // optional comma-separated name filter for focused runs and scale
+    // soaks (SCALING.md); without it every query is measured. Unknown
+    // names throw here, before the session starts.
+    val qs0 = SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_FILTER"))
     // The engine's tuned session base (tmpfs shuffle, sort writer,
     // AQE, SHJ preference) is shared with Verify and every dev
     // harness — see GraftSession's scaladoc for the evidence trail.
@@ -47,14 +51,6 @@ object Bench {
     // spreads it across one rep of many queries, which the median
     // then discards (measured: per-run spikes of 5-10 s move between
     // arbitrary queries run-to-run on this box).
-    // optional comma-separated name filter for local scale soaks
-    // (SCALING.md); the driver sets no filter and measures everything
-    val keep: String => Boolean =
-      sys.env.get("SPARK_GRAFT_BENCH_FILTER") match {
-        case Some(f) => f.split(',').toSet
-        case None    => _ => true
-      }
-    val qs0 = SparkEntry.queries.toSeq.filter(kv => keep(kv._1)).sortBy(_._1)
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
     // A query that throws in ANY rep is FAILED: its elapsed-until-throw
@@ -69,8 +65,7 @@ object Bench {
     // the min protocol discarded them, but the medians (and the
     // driver's headline window) didn't. One warm pass moves all of
     // that out of the measurement; SPARK_GRAFT_BENCH_WARMUP=0 restores
-    // the cold-start measurement for lifecycle A/Bs (ColdStartAB owns
-    // that question properly).
+    // the cold-start measurement.
     val warmups = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1").toInt
     // The FIRST warmup pass is itself timed and reported as cold_* —
     // a warmup_0-equivalent reading in the same run, so cross-round
@@ -106,9 +101,8 @@ object Bench {
       }
     }
     // true median: average the two middle samples when REPS is even —
-    // times(size/2) alone is biased to the upper element (the bug
-    // class CurationBudget.scala documents; default 5 is odd, but
-    // SPARK_GRAFT_BENCH_REPS runs must not skew upward)
+    // times(size/2) alone is biased to the upper element (default 5 is
+    // odd, but SPARK_GRAFT_BENCH_REPS runs must not skew upward)
     def median(times: Seq[Double]): Double = {
       val s0 = times.sorted
       if (s0.size % 2 == 1) s0(s0.size / 2)

@@ -5,12 +5,18 @@ import org.apache.spark.sql.SparkSession
 import graft.streaming.LocalCheckpointFileManager
 
 /** The ENGINE's shared local-session base — one place for the tuned
-  * defaults every harness main (Bench, Verify, TimeOne, the AB
-  * harnesses, StreamBench, Soak, PlanDump, PhaseProbe) runs with, so
-  * the benchmark, the correctness path and dev measurement all plan
-  * queries under the SAME engine configuration (r18 verdict: a planner
-  * preference that lives only in the bench harness makes the benchmark
-  * and the oracle run different planners).
+  * defaults every harness main (Bench, Verify, StreamBench, PlanDump,
+  * PhaseProbe) runs with, so the benchmark, the correctness path and
+  * dev measurement all plan queries under the SAME engine
+  * configuration (r18 verdict: a planner preference that lives only in
+  * the bench harness makes the benchmark and the oracle run different
+  * planners).
+  *
+  * The session is built with [[graft.plans.GraftExtensions]]: the
+  * `graft_*` functions and `AsOfJoinStrategy` are in every session's
+  * state from the start, and `newSession()` children inherit them
+  * (Spark passes the parent's extensions on), so no reader registers
+  * anything per call.
   *
   * Tuned defaults and why (env-overridable unless noted):
   *  - `spark.shuffle.sort.bypassMergeThreshold=8` + tmpfs
@@ -72,5 +78,6 @@ object GraftSession {
       .config("spark.sql.join.preferSortMergeJoin",
         sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
       .config(checkpointManagerConf._1, checkpointManagerConf._2)
+      .withExtensions(new graft.plans.GraftExtensions)
   }
 }

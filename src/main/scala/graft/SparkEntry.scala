@@ -30,4 +30,19 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     packs.flatMap(_.oracle).toMap
+
+  /** The queries a comma-separated name filter picks, sorted by name;
+    * every query when there is no filter. A name that matches no query
+    * throws (all such names listed), so a typo fails the run before
+    * any session starts instead of measuring or verifying nothing. */
+  def select(filter: Option[String])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val names = filter.fold(all.keySet)(_.split(',').toSet)
+    val unknown = names -- all.keySet
+    require(unknown.isEmpty,
+      unknown.toSeq.sorted.map("\"" + _ + "\"")
+        .mkString("unknown query names: ", ", ", ""))
+    names.toSeq.sorted.map(n => n -> all(n))
+  }
 }

@@ -30,12 +30,9 @@ object Tables {
 
   /** Read one test table. `events` goes through the schema-adaptive
     * reader below. */
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark) // idempotent; graft_* in scope
-
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
     else spark.read.parquet(s"$dir/$name.parquet")
-  }
 
   /** Schema-adaptive events reader with optional `[from, until)` UTC
     * bounds. The driver has written `ts` under three physical
@@ -64,7 +61,6 @@ object Tables {
   def events(spark: SparkSession, dir: String,
              from: Option[String] = None,
              until: Option[String] = None): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     // harmless for µs encodings; required to load the NANOS generation
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")

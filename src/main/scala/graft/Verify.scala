@@ -7,10 +7,10 @@ object Verify {
     // args: sfDir outDir [nameFilter] — the optional comma-separated
     // filter narrows both the run and the oracle dump for fast local
     // iteration with tools/check_oracle.py; the driver passes 2 args.
+    // Unknown names throw here, before the session starts.
     val (sfDir, outDir) = (args(0), args(1))
-    val keep: String => Boolean =
-      if (args.length > 2) { val s = args(2).split(',').toSet; s.contains }
-      else _ => true
+    val selected = SparkEntry.select(args.lift(2))
+    val keep = selected.map(_._1).toSet
     // The shared engine session base (GraftSession): the correctness
     // dump now plans under the SAME tuned engine configuration the
     // bench measures — in particular the shuffled-hash-join preference
@@ -19,7 +19,7 @@ object Verify {
     val spark = GraftSession.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -3,8 +3,6 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.plans.GraftExtensions
-
 /** Source adapters: envelope DataFrame → normalized FactEvent rows.
   *
   * Pure column-expression pipelines (no UDFs except the native
@@ -132,10 +130,8 @@ object Adapters {
     cols.map { case (n, c) => c.as(n) }
 
   /** Aloware webhook → FactEvent rows (≤1 per envelope). */
-  def aloware(envelopes: DataFrame): DataFrame = {
-    GraftExtensions.register(envelopes.sparkSession)
+  def aloware(envelopes: DataFrame): DataFrame =
     withDedupKey(parsed(envelopes).filter(alowareKeeps).select(named(alowareColumns): _*))
-  }
 
   /** HubSpot webhook → FactEvent rows. The reference adapter is a
     * scaffold emitting one EMAILS event per envelope
@@ -153,7 +149,6 @@ object Adapters {
     * the input. Unknown sources are dropped (the entrypoints 400 them
     * before the dataflow). */
   def route(envelopes: DataFrame): DataFrame = {
-    GraftExtensions.register(envelopes.sparkSession)
     val source = upper(col("source"))
     val isAloware = source === "ALOWARE"
     val hubspotByName = hubspotColumns.toMap

@@ -44,13 +44,9 @@ object Curation {
       array(stopList.map(lit): _*)).cast("double") /
       size(col("w")) >= minStopRatio
 
-  /** `secs` = wall-clock of THIS stage's materialization (its persist
-    * + count barrier — upstream stages are already cached, so the
-    * barrier charges only the stage's own increment). Excluded from
-    * c1's hash-gated output (timing is environment, not semantics);
-    * surfaced by [[graft.CurationBudget]] for the SCALING.md
-    * per-stage cost table. */
-  final case class StageCount(stage: String, docs: Long, secs: Double = 0.0)
+  /** One stage's surviving document count (the attrition ledger c1
+    * reports). */
+  final case class StageCount(stage: String, docs: Long)
 
   final case class Result(curated: DataFrame, report: Seq[StageCount]) {
     /** Drop the cached curated corpus once consumed (the upstream
@@ -79,9 +75,7 @@ object Curation {
     // pipeline, and nothing but the final corpus outlives the run.
     def stage(name: String, df: DataFrame, drop: DataFrame*): DataFrame = {
       val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val t0 = System.nanoTime()
-      val n = p.count()
-      report += StageCount(name, n, (System.nanoTime() - t0) / 1e9)
+      report += StageCount(name, p.count())
       drop.foreach(_.unpersist(blocking = false))
       p
     }

@@ -159,7 +159,10 @@ case class AsOfJoinExec(
 
 /** Public API: `AsOfJoin.backward(left, right, keys, lTime, rTime)`.
   * Column names must be disjoint between sides (alias first — this
-  * also guarantees distinct expression ids for self-joins). */
+  * also guarantees distinct expression ids for self-joins). The
+  * session must be built with [[GraftExtensions]] (as
+  * `GraftSession.builder` does): its `AsOfJoinStrategy` is what plans
+  * the [[AsOfJoinPlan]] node. */
 object AsOfJoin {
   def backward(
       left: DataFrame, right: DataFrame, keys: Seq[(String, String)],
@@ -177,7 +180,6 @@ object AsOfJoin {
       left: DataFrame, right: DataFrame, keys: Seq[(String, String)],
       leftTime: String, rightTime: String, forward: Boolean): DataFrame = {
     val spark = left.sparkSession
-    GraftExtensions.register(spark)
     val lp = org.apache.spark.sql.graft.Bridge.logicalPlan(left)
     val rp = org.apache.spark.sql.graft.Bridge.logicalPlan(right)
     def res(p: LogicalPlan, n: String) = p.output.find(_.name == n)

@@ -1,16 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{AHash, BloomMightContain, CountIn, DotProduct, LevBound, MinHashSig, NormText, PackedCommonCount, PackedIntersect, PackSortedLongs, PairMerge, SafeDateKey, ShingleHash, ShingleSeq, SigMatches, WinnowMin}
 
-/** Session extension wiring for graft's native expressions. Use via
-  * `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`; for an already
-  * built session call [[GraftExtensions.register]].
+/** Session extension wiring for graft's native expressions and the
+  * as-of join planner strategy. Sessions get them when they are built:
+  * `.withExtensions(new GraftExtensions)` (what `GraftSession.builder`
+  * and the test session do) or
+  * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -74,14 +74,4 @@ object GraftExtensions {
       new ExpressionInfo(classOf[PackedCommonCount].getName,
         "graft_packed_common"),
       (args: Seq[Expression]) => PackedCommonCount(args(0), args(1))))
-
-  /** Register on a live session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-  }
 }

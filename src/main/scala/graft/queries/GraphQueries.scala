@@ -819,11 +819,7 @@ object GraphQueries extends QueryPack {
     * lesson). 12 rounds touch edge-count rows each — at 100 TB the
     * graph build (one agg over the fact join) dominates, and that is
     * a once-per-corpus durable artifact, not per-query work. */
-  private def g5(s: SparkSession, dir: String): DataFrame =
-    g5impl(s, dir, concurrent = true)
-
-  private def g5impl(s: SparkSession, dir: String,
-      concurrent: Boolean): DataFrame = {
+  private def g5(s: SparkSession, dir: String): DataFrame = {
     val arts = RepeatGraphArtifacts(s, dir)
     def cascade(k: Int): DataFrame = {
       var surv = arts.deg.filter(col("deg") >= k)
@@ -852,15 +848,12 @@ object GraphQueries extends QueryPack {
     // resolved once before the threads, so no registry race).
     // Per-cascade rows are deterministic either way; the final
     // ORDER BY fixes cross-cascade order.
-    val frames =
-      if (concurrent) {
-        import scala.concurrent.{Await, ExecutionContext, Future, blocking}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        (2 to 4).map(k => Future(blocking { cascade(k) }))
-          .map(Await.result(_, Duration.Inf))
-      } else (2 to 4).map(cascade)
-    frames.reduce(_ unionAll _)
+    import scala.concurrent.{Await, ExecutionContext, Future, blocking}
+    import scala.concurrent.duration.Duration
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    (2 to 4).map(k => Future(blocking { cascade(k) }))
+      .map(Await.result(_, Duration.Inf))
+      .reduce(_ unionAll _)
       .orderBy(col("k"), col("peel_round"))
   }
 

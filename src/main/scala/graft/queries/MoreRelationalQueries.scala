@@ -352,7 +352,7 @@ object MoreRelationalQueries extends QueryPack {
     * sequential passes. Row-identical (interleaved A/B pre-check +
     * oracle re-gate at all three SFs); 1.373 → 1.228 s min (−11%)
     * on the order-fair interleaved A/B, 10 reps. */
-  private[graft] def q20v2(s: SparkSession, dir: String): DataFrame = {
+  private def q20(s: SparkSession, dir: String): DataFrame = {
     val t = Tables(s, dir, "lineitem")
       .select(col("l_returnflag").as("rf"), col("l_extendedprice").as("x"))
       .withColumn("bk", floor(col("x") / 1000).cast("long"))
@@ -741,9 +741,6 @@ object MoreRelationalQueries extends QueryPack {
   // at sf0.1 (single-row-group input ⇒ one scan task), and the
   // per-row aggregate work is cast-bound either way. Kept the Expand
   // form: same bytes into the exchange, simpler plan.
-
-  private[graft] def devVariants: Map[String, (SparkSession, String) => DataFrame] =
-    Map.empty
 
   private val q26Sql =
     """SELECT l_returnflag, measure, COUNT(*) AS n,
@@ -1521,7 +1518,7 @@ object MoreRelationalQueries extends QueryPack {
     "q17_multiset_ops" -> q17,
     "q18_cms_heavy_hitters" -> q18,
     "q19_running_window" -> q19,
-    "q20_quantile_contract" -> q20v2,
+    "q20_quantile_contract" -> q20,
     "q21_bloom_prefilter" -> q21)
 
   override def oracle: Map[String, String] = Map(

@@ -318,7 +318,7 @@ object SimilarityQueries extends QueryPack {
   // ---------------------------------------------------------------- s6/d8
 
   /** Embedding view for the k-means pair: v (double), vv = ‖v‖². */
-  private[graft] def evec(s: SparkSession, dir: String): DataFrame =
+  private def evec(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "embeddings")
       .withColumn("v", col("embedding").cast("array<double>"))
       .withColumn("vv", dot(col("v"), col("v")))
@@ -331,7 +331,7 @@ object SimilarityQueries extends QueryPack {
     * map-side and nothing shuffles but the (vec_id→cid) result.
     * The IEEE expression order matches the DuckDB mirror exactly
     * (graft_dot and list_sum both fold left-to-right). */
-  private[graft] def assign(e: DataFrame, cents: DataFrame): DataFrame = {
+  private def assign(e: DataFrame, cents: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("vec_id")).orderBy(col("d2").asc, col("cid"))
     e.crossJoin(broadcast(cents))
       .withColumn("d2",
@@ -344,7 +344,7 @@ object SimilarityQueries extends QueryPack {
 
   /** Centroid update: per-dimension mean via posexplode → two-level
     * agg (the s2 centroid shape — partial+final all the way). */
-  private[graft] def centroidUpdate(a: DataFrame): DataFrame =
+  private def centroidUpdate(a: DataFrame): DataFrame =
     a.select(col("cluster").as("cid"), posexplode(col("v")).as(Seq("pos", "x")))
       .groupBy(col("cid"), col("pos")).agg(avg(col("x")).as("m"))
       .groupBy(col("cid"))
@@ -1084,14 +1084,15 @@ object SimilarityQueries extends QueryPack {
     * sized (ranks) and R-sized (refine) frames. At 100 TB the raw
     * fetch is R random reads per query against the vec_id-bucketed
     * vector store — the refine stage's entire cost, which is why R
-    * is a knob and this audit exists. */
-  /** s24 v2 (r18): same math, one pass. The query sample is localized
+    * is a knob and this audit exists.
+    *
+    * r18: same math, one pass. The query sample is localized
     * (QueryPack.localize), and the refined leg folds into the main
     * windowed frame: within the (exact, cid_) order, a shortlisted
     * row's re-rank among shortlisted rows IS the running count of
     * shortlisted rows up to it, so `ref_rk` = that running sum and the
     * whole second scored-subtree + join-back disappears. */
-  private[graft] def s24v2(s: SparkSession, dir: String): DataFrame = {
+  private def s24(s: SparkSession, dir: String): DataFrame = {
     import graft.QueryPack.localize
     val shortR = 10
     val base = evec(s, dir)
@@ -1203,16 +1204,13 @@ object SimilarityQueries extends QueryPack {
     * all probe levels (persisted — the diamond-reuse convention);
     * per-level candidate restriction is a keyed join against the
     * ranked-cell list. At 100 TB the truth side runs on a query
-    * SAMPLE (an audit, not the serving path), same shape. */
-  /** s13 v2 (r18): query sample / cell routes / truth localized, and
+    * SAMPLE (an audit, not the serving path), same shape.
+    *
+    * r18: query sample / cell routes / truth localized, and
     * the 3-row sweep answer localized before return so the per-call
     * exact-distance cache can be RELEASED (the original pinned a
     * fresh 50k-row `dists` persist per invocation for the session). */
-  private[graft] def s13v2(s: SparkSession, dir: String): DataFrame =
-    s13impl(s, dir, bounded = true)
-
-  private def s13impl(s: SparkSession, dir: String,
-      bounded: Boolean): DataFrame = {
+  private def s13(s: SparkSession, dir: String): DataFrame = {
     import graft.QueryPack.localize
     val base = evec(s, dir)
     val arts = PqArtifacts(s, dir)
@@ -1230,9 +1228,8 @@ object SimilarityQueries extends QueryPack {
       .withColumn("cd2",
         col("qq") - lit(2.0) * dot(col("qv"), col("cv")) + col("cc"))
       .withColumn("crk", row_number().over(wCell))
-    val cellRank = localize(
-      (if (bounded) ranked0.filter(col("crk") <= 4) else ranked0)
-        .select(col("qid"), col("cid"), col("crk")))
+    val cellRank = localize(ranked0.filter(col("crk") <= 4)
+      .select(col("qid"), col("cid"), col("crk")))
     val corpus = base.join(arts.cells, "vec_id")
       .select(col("vec_id").as("nid"), col("v").as("nv"),
         col("vv").as("nn"), col("cell"))
@@ -2554,12 +2551,13 @@ object SimilarityQueries extends QueryPack {
     * per-query windows over cell-sized frames) plus one k-row
     * occupancy aggregate that broadcasts; the refine cost is R
     * raw-vector fetches per query and now scales as occ/20, which is
-    * the POINT — a fixed R is the knob that rots as the index grows. */
-  /** s26 v2 (r18): the s24v2 one-pass shape with the per-query
-    * occupancy-derived `r_used` shortlist bound (see s24v2 for the
+    * the POINT — a fixed R is the knob that rots as the index grows.
+    *
+    * r18: s24's one-pass shape with the per-query
+    * occupancy-derived `r_used` shortlist bound (see s24 for the
     * running-count ref_rk argument; here the bound is a per-qid
     * column, constant within every window partition). */
-  private[graft] def s26v2(s: SparkSession, dir: String): DataFrame = {
+  private def s26(s: SparkSession, dir: String): DataFrame = {
     import graft.QueryPack.localize
     val base = evec(s, dir)
     val arts = PqArtifacts(s, dir)
@@ -2776,51 +2774,6 @@ object SimilarityQueries extends QueryPack {
   private[graft] def splitCentsTableName(dir: String): String =
     s"graft_s_splitcents_${graft.ArtifactRegistry.dirTag(dir)}"
 
-  /** s29 — IVF CELL-COUNT ADAPTATION (round 17, bounding the cost of
-    * round 16's adaptive R): when a cell's occupancy crosses the
-    * target, it RE-SPLITS into ⌈occ/target⌉ subcells — members ranked
-    * along a fixed projection axis (equal-frequency split, the
-    * kd/PCA-split quantizer-refinement move re-expressed as pure
-    * column math) and subcell centroids published as the new durable
-    * serving quantizer (`graft_s_splitcents`, s23/s28's publish path).
-    * k' thus scales WITH the corpus, so per-subcell occupancy is
-    * ~constant and the serving audit's occupancy-derived refine
-    * shortlist (`r_used`, s26's knob over the PROBED subcells) stays
-    * flat instead of tracking ever-fatter cells — the per-query cost
-    * bound s26 could not give. Per query the audit reports its cell's
-    * subcell count, the probed occupancy, the flat `r_used`, and
-    * refined recall@3 against the exact FULL-CELL truth (the s24/s26
-    * truth, so the three queries read as one table across SFs). The
-    * oracle rebuilds split, centroids, routing and recall from the raw
-    * embeddings, so resplit ≡ rebuild is hash-gated.
-    *
-    * MEASURED TRADE (SCALING.md round 17 — read before picking this
-    * knob): the cost bound is real (occ_probed ≤ 2×target by
-    * construction, r_used pinned at the floor at every SF) but on
-    * this corpus full-cell recall does NOT survive constant-size
-    * probing at scale — the in-cell true top-3 sit at cosine ≈ 0.5
-    * (measured), i.e. they are NOT projection-localized, so the two
-    * probed slices hold ~2/n_subs of them and recall decays with the
-    * split count (1.0-ish at 1× where 2 subcells ARE the cell → 0 at
-    * 30×). This is information, not implementation: any constant-work
-    * probe of an unstructured cell misses moderately-correlated
-    * neighbors; slices DO localize near-duplicate-grade neighbors
-    * (cos ≈ 1 ⇒ same projection range). Serving guidance: s29 bounds
-    * cost for throughput-critical tiers; recall-critical tiers keep
-    * s26's occupancy-derived R (linear cost, held recall) or fuse
-    * (s30's hybrid holds compound recall with the dense leg adaptive);
-    * the open lever for flat-cost + flat-recall is quantizer PRECISION
-    * scaling with corpus size (codebook bits ∝ log n), the named
-    * next-round item.
-    *
-    * Scale: the per-cell rank rides [[graft.operators.OffsetWindow
-    * .prefixSum]]'s bucketed shape (projection-bucket windows +
-    * broadcast offsets — never one reducer per cell); the centroid
-    * update is partial+final keyed (cell, sub, pos); routing is a
-    * broadcast k'-row join; the probed candidate set is
-    * 2×target-occupancy rows per query BY CONSTRUCTION. The full-cell
-    * truth leg is the declared audit baseline (sampled queries at
-    * 100 TB), not the serving path. */
   /** s29's TRAIN-ONCE split artifacts (the PqArtifacts lifecycle): the
     * subcell assignment and the ADC candidate frame are index
     * artifacts — built once per (session, corpus), read by every
@@ -2888,7 +2841,53 @@ object SimilarityQueries extends QueryPack {
     def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
   }
 
-  /** s29 (r19 final shape): the r18/r19 shape paid FIVE
+  /** s29 — IVF CELL-COUNT ADAPTATION (round 17, bounding the cost of
+    * round 16's adaptive R): when a cell's occupancy crosses the
+    * target, it RE-SPLITS into ⌈occ/target⌉ subcells — members ranked
+    * along a fixed projection axis (equal-frequency split, the
+    * kd/PCA-split quantizer-refinement move re-expressed as pure
+    * column math) and subcell centroids published as the new durable
+    * serving quantizer (`graft_s_splitcents`, s23/s28's publish path).
+    * k' thus scales WITH the corpus, so per-subcell occupancy is
+    * ~constant and the serving audit's occupancy-derived refine
+    * shortlist (`r_used`, s26's knob over the PROBED subcells) stays
+    * flat instead of tracking ever-fatter cells — the per-query cost
+    * bound s26 could not give. Per query the audit reports its cell's
+    * subcell count, the probed occupancy, the flat `r_used`, and
+    * refined recall@3 against the exact FULL-CELL truth (the s24/s26
+    * truth, so the three queries read as one table across SFs). The
+    * oracle rebuilds split, centroids, routing and recall from the raw
+    * embeddings, so resplit ≡ rebuild is hash-gated.
+    *
+    * MEASURED TRADE (SCALING.md round 17 — read before picking this
+    * knob): the cost bound is real (occ_probed ≤ 2×target by
+    * construction, r_used pinned at the floor at every SF) but on
+    * this corpus full-cell recall does NOT survive constant-size
+    * probing at scale — the in-cell true top-3 sit at cosine ≈ 0.5
+    * (measured), i.e. they are NOT projection-localized, so the two
+    * probed slices hold ~2/n_subs of them and recall decays with the
+    * split count (1.0-ish at 1× where 2 subcells ARE the cell → 0 at
+    * 30×). This is information, not implementation: any constant-work
+    * probe of an unstructured cell misses moderately-correlated
+    * neighbors; slices DO localize near-duplicate-grade neighbors
+    * (cos ≈ 1 ⇒ same projection range). Serving guidance: s29 bounds
+    * cost for throughput-critical tiers; recall-critical tiers keep
+    * s26's occupancy-derived R (linear cost, held recall) or fuse
+    * (s30's hybrid holds compound recall with the dense leg adaptive);
+    * the open lever for flat-cost + flat-recall is quantizer PRECISION
+    * scaling with corpus size (codebook bits ∝ log n), the named
+    * next-round item.
+    *
+    * Scale: the per-cell rank rides [[graft.operators.OffsetWindow
+    * .prefixSum]]'s bucketed shape (projection-bucket windows +
+    * broadcast offsets — never one reducer per cell); the centroid
+    * update is partial+final keyed (cell, sub, pos); routing is a
+    * broadcast k'-row join; the probed candidate set is
+    * 2×target-occupancy rows per query BY CONSTRUCTION. The full-cell
+    * truth leg is the declared audit baseline (sampled queries at
+    * 100 TB), not the serving path.
+    *
+    * r19 final shape: the r18/r19 shape paid FIVE
     * sequential driver round trips (q0, nsubs, probed, occProbed,
     * truth) before the final job. Given q0 and the registry
     * artifacts, the sub-occupancy aggregate, the probe routes and the
@@ -2904,7 +2903,7 @@ object SimilarityQueries extends QueryPack {
     * MIN. (r18's note that overlapping the OLD sequential collects
     * measured flat-to-worse still holds — the win comes from
     * restructuring the legs to be independent first.) */
-  private[graft] def s29v3(s: SparkSession, dir: String): DataFrame = {
+  private def s29(s: SparkSession, dir: String): DataFrame = {
     val base = evec(s, dir)
     val split = SplitArtifacts(s, dir)
     val subs = split.subs
@@ -3350,13 +3349,15 @@ object SimilarityQueries extends QueryPack {
     * reaching the hybrid path (Round17InvariantsSpec pins adaptive ≥
     * pinned on the gated corpus). Scale: the serving legs never touch
     * corpus×query (cell-bounded ADC, broadcast codebooks, term-pushdown
-    * BM25); the exact legs are the declared audit baseline. */
-  /** s30 v2 (r18): the query sample and both fused 50-row top-5 lists
+    * BM25); the exact legs are the declared audit baseline.
+    *
+    * r18: the query sample and both fused 50-row top-5 lists
     * localize (QueryPack.localize) instead of persist+count — the
     * recall joins then run local-vs-local, and only the candidate
     * ranking (`ranked`, cell-occupancy-sized) stays a distributed
-    * cached frame. Same math, same localized-answer return. */
-  /** r19: (1) the pinned-control fused list is independent of the
+    * cached frame. Same math, same localized-answer return.
+    *
+    * r19: (1) the pinned-control fused list is independent of the
     * adaptive and exact legs once `ranked` is materialized — overlap
     * all THREE collects (the r18 two-leg localizePar extended, guide
     * §2.6); (2) the recall joins then consume three ≤(10×5)-row LOCAL
@@ -3367,7 +3368,7 @@ object SimilarityQueries extends QueryPack {
     * r18 shape (interleaved A/B pre-check, 50 rows; oracle re-gated
     * at all three SFs): 2.518 → 1.683 s (−33%) on the order-fair
     * interleaved A/B, 10 reps, per-query MIN. */
-  private[graft] def s30v3(s: SparkSession, dir: String): DataFrame = {
+  private def s30(s: SparkSession, dir: String): DataFrame = {
     val L = 20
     val sparse = bm25Top(s, dir, L)
     val base = evec(s, dir)
@@ -3572,19 +3573,14 @@ object SimilarityQueries extends QueryPack {
       |            JOIN rec_p ON stop_a.qid = rec_p.qid
       |ORDER BY stop_a.qid, stop_a.rk""".stripMargin
 
-  /** Dev-only optimization candidates (ABQuery harness); NEVER part of
-    * the declared [[queries]] surface. */
-  private[graft] def devVariants: Map[String, (SparkSession, String) => DataFrame] =
-    Map.empty
-
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s30_hybrid_adaptive" -> s30v3,
-    "s29_cell_resplit" -> s29v3,
+    "s30_hybrid_adaptive" -> s30,
+    "s29_cell_resplit" -> s29,
     "s28_forget_quantizer" -> s28,
     "s27_hybrid_serving" -> s27,
-    "s26_adaptive_refine" -> s26v2,
+    "s26_adaptive_refine" -> s26,
     "s25_rrf_fusion" -> s25,
-    "s24_pq_refine" -> s24v2,
+    "s24_pq_refine" -> s24,
     "s23_ivf_retrain" -> s23,
     "s22_index_maintain" -> s22,
     "s21_mmr_serving" -> s21,
@@ -3594,7 +3590,7 @@ object SimilarityQueries extends QueryPack {
     "s17_embed_profile" -> s17,
     "s16_hard_negatives" -> s16,
     "s14_int8_quant" -> s14,
-    "s13_nprobe_sweep" -> s13v2,
+    "s13_nprobe_sweep" -> s13,
     "s12_adc_audit" -> s12,
     "s11_ivfpq_ann" -> s11,
     "s10_pq_codes" -> s10,

@@ -3,9 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryProgress}
 
-/** Complete per-batch progress series for one streaming run — the
-  * shared harness StreamBench and WatermarkStateAB previously each
-  * hand-rolled (and had to bug-fix in lockstep).
+/** Complete per-batch progress series for one streaming run (the
+  * listener harness StreamBench records its legs with).
   *
   * Why a listener and not `q.recentProgress`: the engine caps
   * recentProgress at spark.sql.streaming.numRecentProgressUpdates

@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * [[StreamingCuration]], [[StreamingEnrich]]) is a transport
   * property, and e33 measures it exactly. A 14-day disorder allowance
   * against a transport whose p99 lateness is minutes holds every
-  * window's state ~5000× longer than needed. MEASURED
-  * (`graft.WatermarkStateAB`, SCALING.md round 13): on the same
+  * window's state ~5000× longer than needed. MEASURED (SCALING.md
+  * round 13, archived in `wmstate_out.json`): on the same
   * time-ordered sf0.1 replay the calibrated delay's session state
   * PLATEAUS at ~12k rows (zero rows dropped, sessions emitted as the
   * stream runs) while the 14-day delay's state GROWS monotonically —

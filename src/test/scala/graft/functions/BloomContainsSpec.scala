@@ -15,7 +15,6 @@ class BloomContainsSpec extends SparkSpec {
   }
 
   test("no false negatives: every inserted key probes true") {
-    graft.plans.GraftExtensions.register(spark)
     val keys = (1L to 2000L).map(_ * 13)
     val bytes = bloomBytes(keys)
     val hits = keys.toDF("k")
@@ -25,7 +24,6 @@ class BloomContainsSpec extends SparkSpec {
   }
 
   test("prunes most non-members at 1% fpp") {
-    graft.plans.GraftExtensions.register(spark)
     val members = (1L to 1000L).toSeq
     val bytes = bloomBytes(members)
     val nonMembers = (100001L to 110000L).toDF("k")
@@ -37,7 +35,6 @@ class BloomContainsSpec extends SparkSpec {
   }
 
   test("prefilter + exact semi join equals plain semi join") {
-    graft.plans.GraftExtensions.register(spark)
     val big = (1L to 20000L).map(i => (i % 97, i)).toDF("key", "payload")
     val small = Seq(3L, 17L, 42L).toDF("key")
     val bytes = bloomBytes(Seq(3L, 17L, 42L))

@@ -23,7 +23,6 @@ class NormTextSpec extends SparkSpec {
   }
 
   private def viaKernel(rows: Seq[String]) = {
-    graft.plans.GraftExtensions.register(spark)
     rows.toDF("s")
       .select(call_function("graft_norm", col("s")).as("n"))
       .collect().map(_.getString(0)).toSeq

@@ -1,13 +1,15 @@
 #!/usr/bin/env python3
-"""Scaling gate over two Soak runs (SCALING.md's sf0.1 -> sf1 table).
+"""Scaling gate over two soak runs (SCALING.md's sf0.1 -> sf1 table).
 
 Usage:
   soak_gate.py <soak_small.json> <soak_big.json> [data_ratio]
                [max_superlinear] [quadratic_csv]
 
-Each input is the one-line `{"metric":"warm_total",...,"queries":{...},
-"failed":[...]}` JSON that `graft.Soak` prints (pass a file holding that
-line). data_ratio defaults to 10 (sf0.1 -> sf1); max_superlinear to 2.0.
+Each input is `graft.Bench` output: the `SPARK_GRAFT_BENCH_OUT` file of
+a run with `SPARK_GRAFT_BENCH_REPS=1 SPARK_GRAFT_BENCH_WARMUP=1` (one
+untimed cold pass, then one timed warm pass; its `"queries"` map holds
+the warm seconds per query, `"failed"` the queries that threw), or a
+`soak_min.py` merge of several such files. data_ratio defaults to 10 (sf0.1 -> sf1); max_superlinear to 2.0.
 
 A query FAILS the gate when warm_big / warm_small > data_ratio *
 max_superlinear — i.e. it scaled more than `max_superlinear`x worse

@@ -1,7 +1,11 @@
 #!/usr/bin/env python3
-"""Merge N graft.Soak one-line JSON outputs into one per-query MIN
-file (the SCALING.md min-over-runs protocol — this VM has whole-run
-degraded windows, so a single soak can over-read any query by 3-10x).
+"""Merge N soak runs into one per-query MIN file (the SCALING.md
+min-over-runs protocol — this VM has whole-run degraded windows, so a
+single soak can over-read any query by 3-10x).
+
+Each run is `graft.Bench` output: the `SPARK_GRAFT_BENCH_OUT` file of a
+run with `SPARK_GRAFT_BENCH_REPS=1 SPARK_GRAFT_BENCH_WARMUP=1`, whose
+`"queries"` map holds each query's warm seconds.
 
 Usage: soak_min.py out.json run1.json run2.json [...]
 """
