@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.Tables
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -124,8 +125,8 @@ object Maintenance {
     val fs = fsOf(s, p)
     recoverInterruptedVacuum(fs, p, staging, orig)
     require(fs.exists(p), s"SCD2 table missing: ${d.path}")
-    val before = s.read.parquet(d.path).count()
-    val kept = Scd2.vacuum(s.read.parquet(d.path),
+    val before = Tables.parquet(s, d.path).count()
+    val kept = Scd2.vacuum(Tables.parquet(s, d.path),
       to_timestamp(lit(d.horizonTs)))
     kept.write.mode("overwrite").parquet(staging.toString)
     // staged data durable BEFORE the marker: the hsync'd marker
@@ -149,7 +150,7 @@ object Maintenance {
     renameOrThrow(fs, staging, p)
     fs.delete(new HPath(p, "_COMMIT"), false)
     fs.delete(orig, true)
-    Scd2Report(d.path, before, s.read.parquet(d.path).count())
+    Scd2Report(d.path, before, Tables.parquet(s, d.path).count())
   }
 
   /** Converges any crash point of [[vacuumInPlace]]'s swap. Decision

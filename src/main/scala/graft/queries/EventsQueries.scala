@@ -1388,7 +1388,7 @@ object EventsQueries extends QueryPack {
     * (PlanAuditSpec locks the pruned-scan shape; this driver gate
     * locks that the served numbers equal the source of truth). */
   private def e31(s: SparkSession, dir: String): DataFrame = {
-    val served = s.read.parquet(ServingLayout(s, dir))
+    val served = Tables.parquet(s, ServingLayout(s, dir))
     served.filter(col("day") === lit(java.sql.Date.valueOf("2024-01-10")))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,7 +44,7 @@ object CdcHighWater {
   /** Read the ledger (empty two-column frame if absent). */
   def read(spark: SparkSession, dir: String): DataFrame = {
     val cur = new java.io.File(dir, "current")
-    if (cur.isDirectory) spark.read.parquet(cur.toString)
+    if (cur.isDirectory) Tables.parquet(spark, cur.toString)
     else spark.range(0).select(col("id").as("key"),
       col("id").as("hw_version"))
   }
