@@ -115,12 +115,8 @@ final class ArtifactRegistry[A](frames: A => Seq[DataFrame],
 }
 
 object ArtifactRegistry {
-  /** Default residency bound per registry, env-tunable. Malformed or
-    * non-positive values fall back to 4 instead of crashing the first
-    * registry use with an ExceptionInInitializerError. */
-  val defaultMaxCorpora: Int =
-    scala.util.Try(sys.env("SPARK_GRAFT_ARTIFACT_CORPORA").trim.toInt)
-      .toOption.filter(_ >= 1).getOrElse(4)
+  /** Default residency bound per registry. */
+  val defaultMaxCorpora: Int = 4
 
   /** JVM-unique component baked into every durable artifact name so
     * two processes sharing a warehouse/tmp over the SAME corpus dir

@@ -18,36 +18,38 @@ import graft.streaming.LocalCheckpointFileManager
   * (Spark passes the parent's extensions on), so no reader registers
   * anything per call.
   *
-  * Tuned defaults and why (env-overridable unless noted):
+  * Tuned defaults and why:
   *  - `spark.shuffle.sort.bypassMergeThreshold=8` + tmpfs
   *    `spark.local.dir`: the bypass-merge shuffle writer creates R
   *    files per map task and this VM's file-create path turns
   *    multi-stage queries erratically 3-15x slower (measured via
   *    executor jstack sampling; see Bench's scaladoc history).
-  *  - `spark.sql.adaptive.enabled=true` (`SPARK_GRAFT_AQE`): AQE
-  *    coalescing / skew-split / runtime join demotion are
-  *    non-negotiable at 100 TB; the measured local -7% orchestration
-  *    cost is a sandbox artifact (OPTIMIZATION_r18.md, rejected).
-  *  - `spark.sql.join.preferSortMergeJoin=false`
-  *    (`SPARK_GRAFT_PREFER_SMJ`): let the planner pick shuffled-hash
-  *    when its size conditions hold — drops the sort on both sides of
-  *    index-scale equi-joins (guide §3.1/§9 baseline; interleaved A/B
-  *    net -3.7% over the 32-query subset in r18). Scale-safe: AQE skew
-  *    split still applies to SHJ and the per-partition build side
-  *    shrinks as partition count grows with the data.
+  *  - `spark.sql.adaptive.enabled=true`: AQE coalescing / skew-split
+  *    / runtime join demotion are non-negotiable at 100 TB; the
+  *    measured local -7% orchestration cost is a sandbox artifact
+  *    (OPTIMIZATION_r18.md, rejected).
+  *  - `spark.sql.join.preferSortMergeJoin=false`: let the planner
+  *    pick shuffled-hash when its size conditions hold — drops the
+  *    sort on both sides of index-scale equi-joins (guide §3.1/§9
+  *    baseline; interleaved A/B net -3.7% over the 32-query subset in
+  *    r18). Scale-safe: AQE skew split still applies to SHJ and the
+  *    per-partition build side shrinks as partition count grows with
+  *    the data.
   *  - `spark.sql.streaming.checkpointFileManagerClass` =
-  *    [[graft.streaming.LocalCheckpointFileManager]] (constant, not
-  *    env-overridable): without the native Hadoop library, Spark's
-  *    local checkpoint writes shell out to `chmod` and `readlink` for
-  *    every file. A webhook micro-batch writes seven (offsets, commit,
-  *    state deltas): 298 ms of state commit and 34 ms of offset log
-  *    per batch on a 4-vCPU VM, against 8 ms and 1 ms through
-  *    java.nio (SCALING.md, "Webhook micro-batch fixed cost").
+  *    [[graft.streaming.LocalCheckpointFileManager]]: without the
+  *    native Hadoop library, Spark's local checkpoint writes shell
+  *    out to `chmod` and `readlink` for every file. A webhook
+  *    micro-batch writes seven (offsets, commit, state deltas): 298 ms
+  *    of state commit and 34 ms of offset log per batch on a 4-vCPU
+  *    VM, against 8 ms and 1 ms through java.nio (SCALING.md,
+  *    "Webhook micro-batch fixed cost").
   *    Non-local schemes keep Spark's own path.
   *
   * Master is `local[$SPARK_GRAFT_CPUS]` with shuffle partitions = the
   * core count (the driver contract: it re-runs the bench at a lower
   * core count to measure scaling, so the master must follow the env).
+  * Every other conf above is a constant; a conf arm for an A/B run
+  * goes through Bench's `SPARK_GRAFT_EXTRA_CONF`.
   */
 object GraftSession {
 
@@ -73,10 +75,8 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.shuffle.sort.bypassMergeThreshold", "8")
       .config("spark.local.dir", "/dev/shm/graft-shuffle")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.join.preferSortMergeJoin", "false")
       .config(checkpointManagerConf._1, checkpointManagerConf._2)
       .withExtensions(new graft.plans.GraftExtensions)
   }

@@ -19,9 +19,7 @@ import org.apache.spark.sql.functions._
   */
 object Adapters {
 
-  /** Event-name → MetricID mapping (reference `src/domain/mapping.ts`). */
-  val alowareToMetric: Map[String, String] =
-    Map("outbound_call" -> "CALLS", "outbound_text" -> "TEXTS")
+  /** HubSpot event-name → MetricID mapping (reference `src/domain/mapping.ts`). */
   val hubspotToMetric: Map[String, String] =
     Map("email_sent" -> "EMAILS", "case_created" -> "CASES")
 

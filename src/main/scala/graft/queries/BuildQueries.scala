@@ -579,8 +579,6 @@ object BuildQueries extends QueryPack {
   /** Spec/lifecycle hooks for the fold artifacts. */
   private[graft] def foldSigsTableName(dir: String): String =
     FoldArtifacts.sigsTable(dir)
-  private[graft] def foldLabelsTableName(dir: String): String =
-    FoldArtifacts.foldLabelsTable(dir)
   private[graft] def foldLabels(s: SparkSession, dir: String): DataFrame =
     FoldArtifacts(s, dir)
 
@@ -673,17 +671,6 @@ object BuildQueries extends QueryPack {
       }
 
     def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
-  }
-
-  /** Spec/lifecycle hooks for the forget snapshot. */
-  private[graft] def forgetSigsTableName(dir: String): String =
-    ForgetArtifacts.sigsTable(dir)
-  private[graft] def forgetFoldLabelsTableName(dir: String): String =
-    ForgetArtifacts.foldLabelsTable(dir)
-  private[graft] def forgetIdxLabelsTableName(dir: String): String =
-    ForgetArtifacts.idxLabelsTable(dir)
-  private[graft] def forgetSnapshot(s: SparkSession, dir: String): Seq[String] = {
-    ForgetArtifacts(s, dir).tables
   }
 
   /** b5 — the forget-cascade audit: one row per non-bench doc with

@@ -47,9 +47,7 @@ import org.apache.spark.sql.functions._
   * trade against (sf10: g1 9.3 s ordered vs 21.1 s plain,
   * same-window): over the dst-bucketed (dst, src)-sorted scan the
   * window STREAMS sorted runs, while the hash aggregate builds
-  * node-count hash maps over edge-count rows. The plain-sum knob
-  * (`SPARK_GRAFT_GRAPH_PLAIN_FOLD`) stays for layouts without the
-  * sorted bucketed table, with per-node 1e-9 parity spec-locked.
+  * node-count hash maps over edge-count rows.
   */
 object GraphQueries extends QueryPack {
 
@@ -62,13 +60,10 @@ object GraphQueries extends QueryPack {
     * is dead code under any test corpus and its "both paths are
     * bit-identical" claim would be unverifiable. */
   private def maxBroadcastNodes: Long =
-    maxBroadcastNodesOverride.getOrElse(
-      scala.util.Try(sys.env("SPARK_GRAFT_GRAPH_BC_NODES").trim.toLong)
-        .toOption.filter(_ >= 0).getOrElse(8L * 1000 * 1000))
+    maxBroadcastNodesOverride.getOrElse(8L * 1000 * 1000)
 
   /** Test hook: force the broadcast/shuffle round-shape decision
-    * (0 ⇒ always the shuffle fallback). Production tunes
-    * `SPARK_GRAFT_GRAPH_BC_NODES` instead. */
+    * (0 ⇒ always the shuffle fallback). */
   @volatile private[graft] var maxBroadcastNodesOverride: Option[Long] = None
 
   private def cutLineage(df: DataFrame): DataFrame =
@@ -351,38 +346,13 @@ object GraphQueries extends QueryPack {
     * sortWithinPartitions would NOT be safe: Catalyst's
     * EliminateSorts legally drops sorts under aggregates, silently
     * breaking fold order — window order is semantic and survives. */
-  private def orderedFoldSum(contrib: DataFrame): DataFrame =
-    if (plainFold)
-      // Plain partial+final sum — no ordering requirement, for
-      // layouts WITHOUT the sorted bucketed edge table. NOT
-      // bit-identical to the ordered fold (float reassociation) so
-      // it cannot serve the oracle hash gate; per-node 1e-9 parity
-      // is spec-locked (Round9InvariantsSpec). On the bucketed
-      // layout it MEASURES 2.3x SLOWER than the window fold (sf10
-      // same-window A/B: hash-aggregating edge-count rows into
-      // node-count groups loses to streaming the file-sorted runs)
-      // — see the class scaladoc; keep the window fold unless the
-      // input really is unsorted.
-      contrib.groupBy(col("dst")).agg(sum(col("c")).as("sm"))
-    else {
-      val wFold = Window.partitionBy(col("dst")).orderBy(col("src"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      contrib
-        .withColumn("sm", sum(col("c")).over(wFold))
-        .groupBy(col("dst")).agg(max(col("sm")).as("sm"))
-    }
-
-  /** Opt into the plain-sum production fold (see [[orderedFoldSum]]).
-    * Default OFF: the declared queries keep the ordered fold — it is
-    * the cross-engine bit-parity artifact the oracle hash gate
-    * needs. Production (no DuckDB twin to match) sets
-    * `SPARK_GRAFT_GRAPH_PLAIN_FOLD=1`. */
-  private def plainFold: Boolean =
-    plainFoldOverride.getOrElse(
-      sys.env.get("SPARK_GRAFT_GRAPH_PLAIN_FOLD").exists(_.trim == "1"))
-
-  /** Test hook mirroring [[maxBroadcastNodesOverride]]. */
-  @volatile private[graft] var plainFoldOverride: Option[Boolean] = None
+  private def orderedFoldSum(contrib: DataFrame): DataFrame = {
+    val wFold = Window.partitionBy(col("dst")).orderBy(col("src"))
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    contrib
+      .withColumn("sm", sum(col("c")).over(wFold))
+      .groupBy(col("dst")).agg(max(col("sm")).as("sm"))
+  }
 
   /** One PageRank/PPR round's contribution frame (dst, src,
     * c = r/deg). Small-rank path (≤ [[maxBroadcastNodes]]): ranks

@@ -1981,18 +1981,19 @@ object SimilarityQueries extends QueryPack {
       |LEFT JOIN pr ON a.qid = pr.qid
       |ORDER BY a.qid""".stripMargin
 
-  /** s21's serving-side candidate retrieval: the s2/s20 IVF shape —
-    * queries assigned to their top-2 centroid cells (nprobe = 2,
-    * broadcast k-row centroid table), candidates scored ONLY inside
-    * the probed cells (equi-join on the cell label), top-12 per query
-    * across the probed cells. Exposed for the PlanAuditSpec lock: the
-    * only nested-loop join in this plan is query×centroid (k rows);
-    * the corpus never enters a non-equi join, so candidate cost is
-    * cell-bounded, not corpus×query. */
-  private[graft] def s21ServingCand(s: SparkSession, dir: String): DataFrame = {
+  /** The IVF serving retrieval (the s2/s20 shape): queries
+    * `vec_id < nQueries` are assigned to their top-2 centroid cells
+    * (nprobe = 2, broadcast k-row centroid table), candidates are
+    * scored ONLY inside the probed cells (equi-join on the cell
+    * label), top-`top` per query across the probed cells as (qid,
+    * nid, cos, rk). The only nested-loop join in this plan is
+    * query×centroid (k rows); the corpus never enters a non-equi
+    * join, so candidate cost is cell-bounded, not corpus×query. */
+  private def ivfTop(s: SparkSession, dir: String, nQueries: Int,
+      top: Int): DataFrame = {
     val e = emb(s, dir).select(col("vec_id"), col("label"), col("v"), col("norm"))
     val cents = CentroidArtifacts(s, dir)
-    val q = e.filter(col("vec_id") < 8)
+    val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qnorm"))
     val wCell = Window.partitionBy(col("qid"))
       .orderBy(col("ccos").desc, col("label"))
@@ -2007,9 +2008,23 @@ object SimilarityQueries extends QueryPack {
       .select(col("qid"), col("vec_id").as("nid"),
         fround(dot(col("qv"), col("v")) / (col("qnorm") * col("norm")), 6)
           .as("cos"))
-      .withColumn("rk", row_number().over(wRank)).filter(col("rk") <= 12)
-      .select(col("qid"), col("nid"), col("cos"))
+      .withColumn("rk", row_number().over(wRank)).filter(col("rk") <= top)
   }
+
+  /** s21's serving-side candidates: [[ivfTop]] for 8 queries, top-12.
+    * Exposed for the PlanAuditSpec cell-bounded lock. */
+  private[graft] def s21ServingCand(s: SparkSession, dir: String): DataFrame =
+    ivfTop(s, dir, 8, 12).select(col("qid"), col("nid"), col("cos"))
+
+  /** Per query, |exact ∩ serving| / |exact| over `nid` — the compound
+    * recall s21 and s27 grade their serving path with. */
+  private def recallVs(exact: DataFrame, serving: DataFrame): DataFrame =
+    exact.select(col("qid"), col("nid"))
+      .join(serving.select(col("qid"), col("nid"), lit(1).as("hit")),
+        Seq("qid", "nid"), "left")
+      .groupBy(col("qid"))
+      .agg(fround(sum(coalesce(col("hit"), lit(0))).cast("double")
+        / count(lit(1)), 6).as("recall"))
 
   /** s21 — PRODUCTION MMR serving: s19's diversity re-rank composed
     * over the IVF cell-bounded retrieval ([[s21ServingCand]]) instead
@@ -2044,13 +2059,7 @@ object SimilarityQueries extends QueryPack {
     // and contend; kept sequential.
     val serving = mmrGreedy(e, graft.QueryPack.localize(s21ServingCand(s, dir)))
     val exact = mmrGreedy(e, BruteCandArtifacts(s, dir))
-    val rec = exact.select(col("qid"), col("nid"))
-      .join(serving.select(col("qid"), col("nid"), lit(1).as("hit")),
-        Seq("qid", "nid"), "left")
-      .groupBy(col("qid"))
-      .agg(fround(sum(coalesce(col("hit"), lit(0))).cast("double")
-        / count(lit(1)), 6).as("recall"))
-    serving.join(rec, Seq("qid"))
+    serving.join(recallVs(exact, serving), Seq("qid"))
       .select(col("qid"), col("pick"), col("nid"), col("mmr"), col("recall"))
       .orderBy(col("qid"), col("pick"))
   }
@@ -2435,60 +2444,9 @@ object SimilarityQueries extends QueryPack {
       |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS srk
       |    FROM folded) t WHERE srk <= 20)""".stripMargin
 
-  private def s25(s: SparkSession, dir: String): DataFrame = {
-    val L = 20
-    // dense leg: s1's exact cosine, capped at L per query
-    val e = emb(s, dir).select(col("vec_id"), col("v"), col("norm"))
-    val q = e.filter(col("vec_id") < 10)
-    val wD = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    val dense = q.as("a").join(e.as("b"), col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"),
-        fround(dot(col("a.v"), col("b.v")) / (col("a.norm") * col("b.norm")), 6)
-          .as("cos"))
-      .withColumn("drk", row_number().over(wD)).filter(col("drk") <= L)
-      .select(col("qid"), col("nid"), col("drk"))
-    // sparse leg: t21's BM25, per-query terms from the query doc text
-    val d = Tables(s, dir, "documents")
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .withColumn("dl", size(col("w")).cast("long"))
-    val stats = d.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_dl"))
-    val qterms = d.filter(col("doc_id") < 10)
-      .select(col("doc_id").as("qid"),
-        explode(array_distinct(slice(col("w"), 1, 4))).as("term"))
-    val terms = qterms.select(col("term")).distinct()
-    val tf = d.select(col("doc_id"), col("dl"), explode(col("w")).as("term"))
-      .join(broadcast(terms), Seq("term"))
-      .groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val wS = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("doc_id"))
-    val sparse = qterms.join(tf, Seq("term"))
-      .filter(col("doc_id") =!= col("qid"))
-      .join(broadcast(dfreq), "term").crossJoin(broadcast(stats))
-      .withColumn("avgdl", col("tot_dl").cast("double") / col("n_docs"))
-      .withColumn("idf",
-        (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-      .withColumn("sterm",
-        col("idf") * (col("tf") * lit(2.2)) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl") / col("avgdl")))))
-      .groupBy(col("qid"), col("doc_id"))
-      .agg(expr("transform(array_sort(collect_list(struct(term, sterm))), " +
-        "x -> x.sterm)").as("ss"))
-      .withColumn("score", fround(expr(
-        "aggregate(slice(ss, 2, size(ss) - 1), ss[0], (acc, x) -> acc + x)"), 6))
-      .withColumn("srk", row_number().over(wS)).filter(col("srk") <= L)
-      .select(col("qid"), col("doc_id").as("nid"), col("srk"))
-    val fused = dense.join(sparse, Seq("qid", "nid"), "full_outer")
-      .withColumn("rrf", fround(
-        coalesce(lit(1.0) / (lit(60) + col("drk")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60) + col("srk")), lit(0.0)), 6))
-    val wF = Window.partitionBy(col("qid")).orderBy(col("rrf").desc, col("nid"))
-    fused.withColumn("rk", row_number().over(wF)).filter(col("rk") <= 5)
-      .select(col("qid"), col("rk").cast("long").as("rk"), col("nid"),
-        col("rrf"))
+  private def s25(s: SparkSession, dir: String): DataFrame =
+    rrfTop5(exactDenseTop(s, dir, 20), bm25Sparse(s, dir, 20))
       .orderBy(col("qid"), col("rk"))
-  }
 
   private val s25Sql =
     """WITH e AS (
@@ -3110,33 +3068,10 @@ object SimilarityQueries extends QueryPack {
 
   /** s27's dense leg — the PRODUCTION retrieval shape (round 16,
     * upgrading s25's declared exact audit leg the way s21 upgraded
-    * s19): queries probe their top-2 centroid cells (broadcast k-row
-    * quantizer), candidates are scored ONLY inside the probed cells
-    * (equi-join on the cell label), top-20 per query. Exposed for the
-    * PlanAuditSpec lock — the only nested-loop join here is
-    * query × k centroids; the corpus never enters a non-equi join. */
-  private[graft] def s27ServingDense(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir).select(col("vec_id"), col("label"), col("v"), col("norm"))
-    val cents = CentroidArtifacts(s, dir)
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("norm").as("qnorm"))
-    val wCell = Window.partitionBy(col("qid"))
-      .orderBy(col("ccos").desc, col("label"))
-    val cells = q.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        fround(dot(col("qv"), col("cv")) / (col("qnorm") * col("cnorm")), 6))
-      .withColumn("crk", row_number().over(wCell)).filter(col("crk") <= 2)
-      .select(col("qid"), col("qv"), col("qnorm"), col("label"))
-    val wRank = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    cells.join(e, Seq("label"))
-      .filter(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        fround(dot(col("qv"), col("v")) / (col("qnorm") * col("norm")), 6)
-          .as("cos"))
-      .withColumn("drk", row_number().over(wRank)).filter(col("drk") <= 20)
-      .select(col("qid"), col("nid"), col("drk"))
-  }
+    * s19): [[ivfTop]] for 10 queries, top-20. Exposed for the
+    * PlanAuditSpec cell-bounded lock. */
+  private[graft] def s27ServingDense(s: SparkSession, dir: String): DataFrame =
+    ivfTop(s, dir, 10, 20).select(col("qid"), col("nid"), col("rk").as("drk"))
 
   /** RRF fusion of a dense and a sparse ranked list → top-5 per query
     * (s25's fusion stage, factored so the exact-audit and serving
@@ -3184,7 +3119,17 @@ object SimilarityQueries extends QueryPack {
   }
 
   private def bm25TopBuild(s: SparkSession, dir: String): DataFrame = {
-    val L = 20
+    val sparse = bm25Sparse(s, dir, 20)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // eager under the registry's failure contract
+    try { sparse.count(); sparse }
+    catch { case t: Throwable =>
+      sparse.unpersist(blocking = false); throw t }
+  }
+
+  /** The BM25 sparse top-`L` list (qid, nid, srk), lazy: s25 reads it
+    * directly, s27/s30 through the persisted [[bm25Top]] artifact. */
+  private def bm25Sparse(s: SparkSession, dir: String, L: Int): DataFrame = {
     val d = Tables(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .withColumn("dl", size(col("w")).cast("long"))
@@ -3200,7 +3145,7 @@ object SimilarityQueries extends QueryPack {
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val wS = Window.partitionBy(col("qid"))
       .orderBy(col("score").desc, col("doc_id"))
-    val sparse = qterms.join(tf, Seq("term"))
+    qterms.join(tf, Seq("term"))
       .filter(col("doc_id") =!= col("qid"))
       .join(broadcast(dfreq), "term").crossJoin(broadcast(stats))
       .withColumn("avgdl", col("tot_dl").cast("double") / col("n_docs"))
@@ -3216,11 +3161,6 @@ object SimilarityQueries extends QueryPack {
         "aggregate(slice(ss, 2, size(ss) - 1), ss[0], (acc, x) -> acc + x)"), 6))
       .withColumn("srk", row_number().over(wS)).filter(col("srk") <= L)
       .select(col("qid"), col("doc_id").as("nid"), col("srk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager under the registry's failure contract
-    try { sparse.count(); sparse }
-    catch { case t: Throwable =>
-      sparse.unpersist(blocking = false); throw t }
   }
 
   /** The exact dense top-`L` (s25's declared audit baseline — the
@@ -3248,13 +3188,7 @@ object SimilarityQueries extends QueryPack {
     // and measured ~20% SLOWER on the interleaved A/B (1.19 -> 1.48 s)
     val serving = rrfTop5(s27ServingDense(s, dir), sparse)
     val exact = rrfTop5(exactDense, sparse)
-    val rec = exact.select(col("qid"), col("nid"))
-      .join(serving.select(col("qid"), col("nid"), lit(1).as("hit")),
-        Seq("qid", "nid"), "left")
-      .groupBy(col("qid"))
-      .agg(fround(sum(coalesce(col("hit"), lit(0))).cast("double")
-        / count(lit(1)), 6).as("recall"))
-    serving.join(rec, Seq("qid"))
+    serving.join(recallVs(exact, serving), Seq("qid"))
       .select(col("qid"), col("rk"), col("nid"), col("rrf"), col("recall"))
       .orderBy(col("qid"), col("rk"))
   }

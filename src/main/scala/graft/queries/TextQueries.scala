@@ -581,48 +581,12 @@ object TextQueries extends QueryPack {
     * partial+final hash agg keyed by doc_id (already co-grouped with
     * the explode). No corpus-sized shuffle anywhere.
     *
-    * When the bench gram set is too big to broadcast (a mega-suite,
-    * or a gated run whose stand-in bench derives from the corpus
-    * itself), [[benchProbe]] switches to q21's shape: a driver-built
-    * bloom sketch prunes the corpus grams map-side (the sketch is
-    * O(accuracy) bytes, never the gram rows), then a SHUFFLED exact
-    * join on the ~selectivity·corpus survivors removes the false
-    * positives — result-identical by construction, spec-pinned. */
-  private def t11(s: SparkSession, dir: String): DataFrame =
-    t11Path(s, dir, bloomPath = false)
-
-  /** The oversized-bench fallback, exposed for the parity spec. */
-  private[graft] def t11Bloom(s: SparkSession, dir: String): DataFrame =
-    t11Path(s, dir, bloomPath = true)
-
-  /** probes ⋈ bench on `gram`: broadcast hash probe (small bench) or
-    * bloom-prefilter + shuffled exact join (oversized bench). */
-  private def benchProbe(probes: DataFrame, bench: DataFrame,
-      bloomPath: Boolean): DataFrame =
-    if (bloomPath) {
-      val benchGrams = bench.select(col("gram")).distinct()
-      // Size the sketch from the MEASURED cardinality, not a constant:
-      // a fixed 500k expectedNumItems drove FPP → 1 exactly in the
-      // oversized regime this path exists for. ~9.6 bits/item ≈ 1%
-      // FPP; the byte cap keeps the sketch task-shippable at any
-      // suite size — past it FPP degrades gracefully and the exact
-      // shuffled join below still removes every false positive, so
-      // correctness never depends on the sketch, only prune rate.
-      val n = math.max(benchGrams.count(), 1L)
-      val maxBits = 8L * 64 * 1024 * 1024 // 64 MB cap
-      val bloom = benchGrams.stat.bloomFilter("gram", n,
-        math.min(maxBits, math.max((n * 9.6).toLong, 64L)))
-      val bos = new java.io.ByteArrayOutputStream()
-      bloom.writeTo(bos)
-      probes
-        .filter(call_function("graft_bloom_contains",
-          lit(bos.toByteArray), col("gram")))
-        .hint("shuffle_hash")
-        .join(bench.hint("shuffle_hash"), Seq("gram"))
-    } else probes.join(broadcast(bench), Seq("gram"))
-
-  private def t11Path(s: SparkSession, dir: String,
-      bloomPath: Boolean): DataFrame = {
+    * The bench gram set is broadcast whatever its size; q21
+    * (`q21_bloom_prefilter`) is the bloom-prefilter shape for a probe
+    * side too big to broadcast: a driver-built sketch prunes the big
+    * side map-side, then a shuffled exact join removes the false
+    * positives. */
+  private def t11(s: SparkSession, dir: String): DataFrame = {
     // train-once decontam index: t11 (report) and t20 (apply) share
     // one persisted gram build instead of re-exploding the corpus
     val grams = TextArtifacts.grams8(s, dir)
@@ -630,10 +594,10 @@ object TextQueries extends QueryPack {
       .select(col("doc_id").as("bench_doc"), explode(col("xs")).as("gram"))
       .distinct()
     val train = grams.filter(col("doc_id") % 10 =!= 7)
-    val hits = benchProbe(
-      train.select(col("doc_id"), size(col("xs")).cast("long").as("n_grams"),
-        explode(col("xs")).as("gram")),
-      bench, bloomPath)
+    val hits = train.select(col("doc_id"),
+        size(col("xs")).cast("long").as("n_grams"),
+        explode(col("xs")).as("gram"))
+      .join(broadcast(bench), Seq("gram"))
       .groupBy(col("doc_id"), col("n_grams"))
       .agg(countDistinct(col("gram")).as("n_contaminated"),
         countDistinct(col("bench_doc")).as("n_bench_docs"))
@@ -1128,34 +1092,37 @@ object TextQueries extends QueryPack {
     * reaches 5% are dropped, and the per-source survivor ledger
     * (docs dropped, token mass kept) is what actually feeds the t12
     * mixture step. Same broadcast-benchmark probe as t11 — the gram
-    * index never shuffles; the drop set joins back doc-keyed. The
-    * same [[benchProbe]] bloom fallback covers oversized bench sets
-    * (spec-pinned result parity). */
-  private def t20(s: SparkSession, dir: String): DataFrame =
-    t20Path(s, dir, bloomPath = false)
-
-  /** The oversized-bench fallback, exposed for the parity spec. */
-  private[graft] def t20Bloom(s: SparkSession, dir: String): DataFrame =
-    t20Path(s, dir, bloomPath = true)
+    * index never shuffles; the drop set joins back doc-keyed. */
+  private def t20(s: SparkSession, dir: String): DataFrame = {
+    val grams = TextArtifacts.grams8(s, dir)
+    val train = grams.filter(col("doc_id") % 10 =!= 7)
+    val dropped = decontamDropIds(s, dir)
+      .withColumn("bad", lit(true))
+    train
+      .select(col("doc_id"), col("source"), col("n_words").as("toks"))
+      .join(dropped, Seq("doc_id"), "left")
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_train_docs"),
+        sum(when(col("bad"), 1L).otherwise(0L)).as("n_dropped"),
+        sum(when(col("bad").isNull, col("toks")).otherwise(0L))
+          .as("surviving_tokens"))
+      .orderBy(col("source"))
+  }
 
   /** The decontamination DROP SET (one `doc_id` column): training
     * docs whose distinct benchmark-8-gram overlap reaches the 5% bar
     * (the UNROUNDED ratio — the apply predicate, not t11's rounded
     * report column). Shared by t20 (the per-source apply ledger) and
     * b1_corpus_build (the end-to-end manifest), so both agree on
-    * exactly which docs the decontamination stage removes. */
-  private[graft] def decontamDropIds(s: SparkSession, dir: String,
-      bloomPath: Boolean = false): DataFrame =
-    // the default broadcast path is a TRAIN-ONCE artifact (the
-    // quarantine list a pipeline writes once per corpus+benchmark
-    // snapshot, consumed by t20's apply ledger and the b1/b2 build
-    // manifests); the bloom fallback stays fresh — it exists for the
-    // oversized-bench regime and is exercised by its parity spec
-    if (bloomPath) decontamDropIdsBuild(s, dir, bloomPath = true)
-    else DecontamArtifacts(s, dir)
+    * exactly which docs the decontamination stage removes. The bench
+    * gram set is broadcast (q21 is the bloom-prefilter shape). It is
+    * a TRAIN-ONCE artifact: the quarantine list a pipeline writes once
+    * per corpus+benchmark snapshot, consumed by t20's apply ledger and
+    * the b1/b2 build manifests. */
+  private[graft] def decontamDropIds(s: SparkSession, dir: String): DataFrame =
+    DecontamArtifacts(s, dir)
 
-  private def decontamDropIdsBuild(s: SparkSession, dir: String,
-      bloomPath: Boolean): DataFrame = {
+  private def decontamDropIdsBuild(s: SparkSession, dir: String): DataFrame = {
     val grams = TextArtifacts.grams8(s, dir) // t11's index, built once
     // the ONE definition of the benchmark gram index — shared with
     // the streaming recheck so the quarantine list and
@@ -1163,10 +1130,9 @@ object TextQueries extends QueryPack {
     // means
     val bench = benchGramIndex(s, dir)
     val train = grams.filter(col("doc_id") % 10 =!= 7)
-    benchProbe(
-      train.select(col("doc_id"), expr("size(xs)").cast("long").as("n_grams"),
-        explode(col("xs")).as("gram")),
-      bench, bloomPath)
+    train.select(col("doc_id"), expr("size(xs)").cast("long").as("n_grams"),
+        explode(col("xs")).as("gram"))
+      .join(broadcast(bench), Seq("gram"))
       .groupBy(col("doc_id"), col("n_grams"))
       .agg(countDistinct(col("gram")).as("nc"))
       .filter(col("nc").cast("double") / col("n_grams") >= 0.05)
@@ -1198,7 +1164,7 @@ object TextQueries extends QueryPack {
         val nb = s2.conf.get("spark.sql.shuffle.partitions", "32").toInt
         val scan = graft.etl.DurableArtifacts.bucketedTable(
           s2, tableName(d), nb, Seq("doc_id"), Seq("doc_id")) {
-          decontamDropIdsBuild(s2, d, bloomPath = false)
+          decontamDropIdsBuild(s2, d)
         }
         val p = scan
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1221,29 +1187,11 @@ object TextQueries extends QueryPack {
     * grams against this index
     * ([[graft.streaming.StreamingAdmission.arrivalContamIds]]).
     * Benchmark suites are MB-scale against a 100 TB corpus — this
-    * frame broadcasts (the t11 scale note; the bloom fallback covers
-    * the oversized regime). */
+    * frame broadcasts (the t11 scale note). */
   private[graft] def benchGramIndex(s: SparkSession, dir: String): DataFrame =
     TextArtifacts.grams8(s, dir)
       .filter(col("doc_id") % 10 === 7)
       .select(explode(col("xs")).as("gram")).distinct()
-
-  private def t20Path(s: SparkSession, dir: String,
-      bloomPath: Boolean): DataFrame = {
-    val grams = TextArtifacts.grams8(s, dir)
-    val train = grams.filter(col("doc_id") % 10 =!= 7)
-    val dropped = decontamDropIds(s, dir, bloomPath)
-      .withColumn("bad", lit(true))
-    train
-      .select(col("doc_id"), col("source"), col("n_words").as("toks"))
-      .join(dropped, Seq("doc_id"), "left")
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_train_docs"),
-        sum(when(col("bad"), 1L).otherwise(0L)).as("n_dropped"),
-        sum(when(col("bad").isNull, col("toks")).otherwise(0L))
-          .as("surviving_tokens"))
-      .orderBy(col("source"))
-  }
 
   private val t20Sql =
     """WITH g AS (

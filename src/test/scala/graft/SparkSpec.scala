@@ -5,7 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** Shared local session for all specs (one JVM-wide session — specs
-  * run in a forked JVM, `Test / fork := true`). */
+  * run in a forked JVM, `Test / fork := true`). It is the engine's own
+  * [[GraftSession.builder]] session, so specs plan and run queries
+  * under the configuration Bench and Verify use. */
 trait SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkSpec.session
   def sc = spark.sparkContext
@@ -13,15 +15,10 @@ trait SparkSpec extends AnyFunSuite with Matchers {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
