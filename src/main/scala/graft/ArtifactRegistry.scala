@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Bounded, (session, corpus-dir)-keyed registry of train-once
   * artifact bundles (persisted frames: dedup indexes, PQ codebooks,
@@ -24,16 +25,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * frames), and a get racing a completed release observes the
   * retired cell and re-resolves a fresh one.
   *
-  * Build contract: a build that THROWS must first unpersist whatever
-  * frames it already materialized (use a tracked persist — see
-  * GraphArtifacts.build) — the registry cannot know a failed build's
-  * partial frames, and without cleanup every retry would persist
-  * fresh copies.
+  * Build contract: the registry owns every frame a build caches. A
+  * build receives an [[ArtifactRegistry.Build]] handle and caches
+  * through `persist(df)` only (MEMORY_AND_DISK, then an eager
+  * `count()` so parallel stages never race the cache fill); the cell
+  * records each such frame. If the build throws, the cell unpersists
+  * everything it recorded and rethrows, so a retry starts clean.
+  * Retiring the cell (release or eviction) unpersists the recorded
+  * frames, including intermediates the bundle does not return. A
+  * build that reads another registry's artifact (FoldArtifacts reads
+  * DocArtifacts) does so through that registry: the inner frames are
+  * recorded in the inner cell and retire with it, never with the
+  * outer one.
   *
   * Durable side-artifacts (bucketed tables, serving directories):
-  * `onRetire` runs after the frames are unpersisted on EXPLICIT
-  * `release` only — the caller of release asserts no query is still
-  * reading the bundle. LRU EVICTION deliberately does NOT run
+  * `onRetire(session, dir)` runs after the frames are unpersisted on
+  * EXPLICIT `release` only — the caller of release asserts no query is
+  * still reading the bundle. LRU EVICTION deliberately does NOT run
   * `onRetire`: an evicted bundle may still back an in-flight query's
   * frame, and unpersist degrades that frame to lazy recompute from
   * its lineage ROOTS — which are exactly the durable tables/files
@@ -48,30 +56,48 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * frame) is closed for builders that go through
   * [[graft.etl.DurableArtifacts.bucketedTable]]: rebuild ATTACHES to
   * the existing table and never rewrites it.
+  *
+  * One corpus retires everywhere at once:
+  * [[ArtifactRegistry.release]]`(s, dir)` releases that key in every
+  * registry (the snapshot-rotation hook of a long-lived service);
+  * queries lazily rebuild on next use.
   */
-final class ArtifactRegistry[A](frames: A => Seq[DataFrame],
+final class ArtifactRegistry[A](
     maxCorpora: Int = ArtifactRegistry.defaultMaxCorpora,
-    onRetire: A => Unit = (_: A) => ()) {
+    onRetire: (SparkSession, String) => Unit = (_, _) => ()) {
   require(maxCorpora >= 1, "registry must admit at least one corpus")
+  ArtifactRegistry.register(this)
 
   private final class Cell(s: SparkSession, dir: String,
-      build: (SparkSession, String) => A) {
+      build: ArtifactRegistry.Build => A) {
     private var built: Option[A] = None
+    private var frames: List[DataFrame] = Nil
     private var retired = false
-    /** None ⇒ this cell was released/evicted while we waited. */
+    /** None ⇒ this cell was released/evicted while we waited. A
+      * failed build retires the cell too (after unpersisting what it
+      * recorded), so callers waiting on it re-resolve a fresh one. */
     def get(): Option[A] = synchronized {
       if (retired) None
-      else Some(built.getOrElse { val a = build(s, dir); built = Some(a); a })
+      else Some(built.getOrElse {
+        val b = new ArtifactRegistry.Build
+        val a = try build(b) catch { case t: Throwable =>
+          b.frames.foreach(_.unpersist(blocking = false))
+          retired = true
+          throw t
+        }
+        built = Some(a); frames = b.frames; a
+      })
     }
     /** `dropDurable = true` (explicit release — caller asserts no
       * in-flight readers) also runs `onRetire`; eviction passes false
       * so an in-flight reader's recompute keeps its durable roots. */
     def retire(dropDurable: Boolean): Unit = synchronized {
-      built.foreach { a =>
-        frames(a).foreach(_.unpersist(blocking = false))
-        if (dropDurable) onRetire(a)
+      if (built.isDefined) {
+        frames.foreach(_.unpersist(blocking = false))
+        if (dropDurable) onRetire(s, dir)
       }
       built = None
+      frames = Nil
       retired = true
     }
   }
@@ -82,7 +108,7 @@ final class ArtifactRegistry[A](frames: A => Seq[DataFrame],
     scala.collection.mutable.LinkedHashMap.empty[(SparkSession, String), Cell]
 
   def apply(s: SparkSession, dir: String)(
-      build: (SparkSession, String) => A): A = {
+      build: ArtifactRegistry.Build => A): A = {
     val key = (s, dir)
     val (cell, evicted) = synchronized {
       val c = reg.remove(key).getOrElse(new Cell(s, dir, build))
@@ -96,12 +122,14 @@ final class ArtifactRegistry[A](frames: A => Seq[DataFrame],
     }
     evicted.foreach(_.retire(dropDurable = false)) // outside the map
     // lock: retire may wait for an in-flight build
-    cell.get() match {
+    // A defunct cell (failed build, or lost the race to a
+    // release/eviction) leaves the map; drop ONLY that cell.
+    def drop(): Unit =
+      synchronized { if (reg.get(key).contains(cell)) reg.remove(key) }
+    val got = try cell.get() catch { case t: Throwable => drop(); throw t }
+    got match {
       case Some(a) => a
-      case None => // lost the race to a release/eviction: drop ONLY
-        // that defunct cell, then resolve a fresh one
-        synchronized { if (reg.get(key).contains(cell)) reg.remove(key) }
-        apply(s, dir)(build)
+      case None => drop(); apply(s, dir)(build)
     }
   }
 
@@ -117,6 +145,37 @@ final class ArtifactRegistry[A](frames: A => Seq[DataFrame],
 object ArtifactRegistry {
   /** Default residency bound per registry. */
   val defaultMaxCorpora: Int = 4
+
+  /** The handle a build caches through (see the class's build
+    * contract). */
+  final class Build private[ArtifactRegistry] () {
+    private var persisted: List[DataFrame] = Nil
+    private[ArtifactRegistry] def frames: List[DataFrame] =
+      synchronized(persisted)
+
+    /** Persist `df` MEMORY_AND_DISK, record it in this build's cell,
+      * then materialize it with `count()`; returns the cached frame. */
+    def persist(df: DataFrame): DataFrame = {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      synchronized { persisted ::= p }
+      p.count()
+      p
+    }
+  }
+
+  // Every registry, weakly held (a spec's local registry is collected
+  // with its spec), so one release reaches them all.
+  private val all = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[ArtifactRegistry[_], java.lang.Boolean]())
+  private def register(r: ArtifactRegistry[_]): Unit =
+    all.synchronized { all.add(r); () }
+
+  /** Release corpus `dir` of session `s` in every registry: unpersist
+    * its frames and run each registry's `onRetire`. The caller asserts
+    * no query is still reading those artifacts. */
+  def release(s: SparkSession, dir: String): Unit =
+    all.synchronized(all.toArray(Array.empty[ArtifactRegistry[_]]))
+      .foreach(_.release(s, dir))
 
   /** JVM-unique component baked into every durable artifact name so
     * two processes sharing a warehouse/tmp over the SAME corpus dir
@@ -139,21 +198,24 @@ object ArtifactRegistry {
     .getInstance("MD5").digest(dir.getBytes("UTF-8"))
     .take(8).map("%02x".format(_)).mkString + "p" + processTag
 
-  // Best-effort deletion of process-scoped durable artifacts at JVM
-  // exit. Plain Hadoop FS (no Spark dependency — the session is
-  // usually stopped by the time the hook runs); failures are ignored,
-  // a crashed process leaves its dirs for manual/periodic cleanup.
+  /** Best-effort recursive delete of a durable artifact path (a
+    * serving directory's `onRetire`, the exit hook). Plain Hadoop FS
+    * (no Spark dependency — the session is usually stopped by the
+    * time the exit hook runs); failures are ignored, a crashed
+    * process leaves its dirs for manual/periodic cleanup. */
+  private[graft] def deleteDir(p: String): Unit =
+    try {
+      val path = new org.apache.hadoop.fs.Path(p)
+      path.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        .delete(path, true)
+      ()
+    } catch { case _: Throwable => () }
+
+  // Deletion of process-scoped durable artifacts at JVM exit.
   private val exitPaths = scala.collection.mutable.LinkedHashSet.empty[String]
   private lazy val hookArmed: Boolean = {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      exitPaths.synchronized(exitPaths.toSeq).foreach { p =>
-        try {
-          val path = new org.apache.hadoop.fs.Path(p)
-          path.getFileSystem(new org.apache.hadoop.conf.Configuration())
-            .delete(path, true)
-          ()
-        } catch { case _: Throwable => () }
-      }))
+      exitPaths.synchronized(exitPaths.toSeq).foreach(deleteDir)))
     true
   }
 

@@ -23,7 +23,11 @@ import graft.streaming.LocalCheckpointFileManager
   *    `spark.local.dir`: the bypass-merge shuffle writer creates R
   *    files per map task and this VM's file-create path turns
   *    multi-stage queries erratically 3-15x slower (measured via
-  *    executor jstack sampling; see Bench's scaladoc history).
+  *    executor jstack sampling; see Bench's scaladoc history). The
+  *    tmpfs dir applies only when `SPARK_LOCAL_DIRS` is unset: Spark
+  *    lets that variable override `spark.local.dir`, and the Tier-1
+  *    test command and `perfbench/run.py` both set it, so those runs
+  *    shuffle and spill to the directory they name.
   *  - `spark.sql.adaptive.enabled=true`: AQE coalescing / skew-split
   *    / runtime join demotion are non-negotiable at 100 TB; the
   *    measured local -7% orchestration cost is a sandbox artifact

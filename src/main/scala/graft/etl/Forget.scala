@@ -165,13 +165,18 @@ object Forget {
     *                 filtered to mineable docs (≥ n words)
     * @param spansPre the pre-forget mine (d1, d2, start1, start2,
     *                 span_words)
+    * @param keep     caches and materializes the result (d21 passes its
+    *                 registry build's `persist`, which then owns it);
+    *                 the retraction's working caches are released once
+    *                 it returns
     * @return the post-forget mine, equal to re-mining the surviving
     *         corpus from scratch (ForgetSpec gates the identity,
     *         including a constructed uncapping case)
     */
   def retractSpans(docs: DataFrame, idCol: String, wordsCol: String,
       spansPre: DataFrame, forget: DataFrame,
-      n: Int, maxDf: Int, minSpanWords: Int): DataFrame = {
+      n: Int, maxDf: Int, minSpanWords: Int)(
+      keep: DataFrame => DataFrame): DataFrame = {
     val f = forget.select(col("doc_id").as("__fid"))
     def gramsOf(d: DataFrame): DataFrame = d
       .select(col(idCol).as("__id"),
@@ -245,22 +250,8 @@ object Forget {
       .join(broadcast(touched), Seq("d1", "d2"), "left_anti")
     // materialize the (span-rows-sized) result, then RELEASE the
     // retraction's working caches — pgG is corpus-gram-scale and must
-    // not outlive the call. The returned frame is persisted; the
-    // caller owns its lifecycle (d21 memoizes it per corpus through
-    // the ArtifactRegistry and releases with the d-family artifacts).
-    val out = carried.unionByName(recomputed)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try out.count()
-    catch { case t: Throwable =>
-      out.unpersist(blocking = false)
-      pgG.unpersist(blocking = false)
-      touched.unpersist(blocking = false)
-      cappedD.unpersist(blocking = false)
-      throw t
-    }
-    pgG.unpersist(blocking = false)
-    touched.unpersist(blocking = false)
-    cappedD.unpersist(blocking = false)
-    out
+    // not outlive the call
+    try keep(carried.unionByName(recomputed))
+    finally Seq(pgG, touched, cappedD).foreach(_.unpersist(blocking = false))
   }
 }

@@ -502,10 +502,10 @@ object BuildQueries extends QueryPack {
     * Nothing rescans or rewrites the index — exactly the daily
     * maintain loop a 100 TB corpus runs. */
   private object FoldArtifacts {
-    final case class Art(labels: DataFrame, tables: Seq[String])
-    private val reg = new graft.ArtifactRegistry[Art](a => Seq(a.labels),
-      onRetire = a => a.tables.foreach(t =>
-        graft.etl.DurableArtifacts.drop(a.labels.sparkSession, t)))
+    private val reg = new graft.ArtifactRegistry[DataFrame](
+      onRetire = (s, dir) =>
+        Seq(sigsTable(dir), idxLabelsTable(dir), foldLabelsTable(dir))
+          .foreach(graft.etl.DurableArtifacts.drop(s, _)))
 
     def sigsTable(dir: String): String =
       s"graft_b_idxsigs_${graft.ArtifactRegistry.dirTag(dir)}"
@@ -514,66 +514,58 @@ object BuildQueries extends QueryPack {
     def foldLabelsTable(dir: String): String =
       s"graft_b_foldlabels_${graft.ArtifactRegistry.dirTag(dir)}"
 
-    def apply(s: SparkSession, dir: String): DataFrame =
-      reg(s, dir) { (s2, d) =>
-        val nb = s2.conf.get("spark.sql.shuffle.partitions", "32").toInt
-        val arrP = DedupQueries.isDeltaArrival(col("doc_id"))
-        val sigs = DedupQueries.docSigs(s2, d)
-        // pre-fold state — what "yesterday's" build wrote (build-or-
-        // attach: a production run attaches; only this static-corpus
-        // harness ever builds them)
-        graft.etl.DurableArtifacts.bucketedTable(
-          s2, sigsTable(d), nb, Seq("doc_id"), Seq("doc_id")) {
-          sigs.filter(!arrP && col("doc_id") % 10 =!= 7)
+    def apply(s: SparkSession, dir: String): DataFrame = reg(s, dir) { b =>
+      val nb = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val arrP = DedupQueries.isDeltaArrival(col("doc_id"))
+      val sigs = DedupQueries.docSigs(s, dir)
+      // pre-fold state — what "yesterday's" build wrote (build-or-
+      // attach: a production run attaches; only this static-corpus
+      // harness ever builds them)
+      graft.etl.DurableArtifacts.bucketedTable(
+        s, sigsTable(dir), nb, Seq("doc_id"), Seq("doc_id")) {
+        sigs.filter(!arrP && col("doc_id") % 10 =!= 7)
+      }
+      graft.etl.DurableArtifacts.bucketedTable(
+        s, idxLabelsTable(dir), nb, Seq("doc_id"), Seq("doc_id")) {
+        val idxPairs = DedupQueries.d3PairsArtifact(s, dir)
+          .filter(!DedupQueries.isDeltaArrival(col("d1")) &&
+            col("d1") % 10 =!= 7 &&
+            !DedupQueries.isDeltaArrival(col("d2")) &&
+            col("d2") % 10 =!= 7)
+          .select(col("d1"), col("d2"))
+        graft.operators.ConnectedComponents.run(idxPairs, "d1", "d2",
+          Tables(s, dir, "documents")
+            .filter(!arrP && col("doc_id") % 10 =!= 7)
+            .select(col("doc_id")), "doc_id")
+          .select(col("id").as("doc_id"), col("cluster"))
+      }
+      val foldScan = graft.etl.DurableArtifacts.bucketedTable(
+        s, foldLabelsTable(dir), nb, Seq("doc_id"), Seq("doc_id")) {
+        // (a) signature-index fold: append the arrival batch's
+        // signatures exactly once (idempotence checked under the
+        // sigs table's stripe lock — a retried fold cannot
+        // double-append)
+        graft.etl.DurableArtifacts.appendBucketed(
+          s, sigsTable(dir), nb, Seq("doc_id"), Seq("doc_id"),
+          alreadyFolded = cur => !cur.filter(arrP).isEmpty) {
+          sigs.filter(arrP)
         }
-        graft.etl.DurableArtifacts.bucketedTable(
-          s2, idxLabelsTable(d), nb, Seq("doc_id"), Seq("doc_id")) {
-          val idxPairs = DedupQueries.d3PairsArtifact(s2, d)
-            .filter(!DedupQueries.isDeltaArrival(col("d1")) &&
-              col("d1") % 10 =!= 7 &&
-              !DedupQueries.isDeltaArrival(col("d2")) &&
-              col("d2") % 10 =!= 7)
-            .select(col("d1"), col("d2"))
-          graft.operators.ConnectedComponents.run(idxPairs, "d1", "d2",
-            Tables(s2, d, "documents")
-              .filter(!arrP && col("doc_id") % 10 =!= 7)
-              .select(col("doc_id")), "doc_id")
-            .select(col("id").as("doc_id"), col("cluster"))
-        }
-        val foldScan = graft.etl.DurableArtifacts.bucketedTable(
-          s2, foldLabelsTable(d), nb, Seq("doc_id"), Seq("doc_id")) {
-          // (a) signature-index fold: append the arrival batch's
-          // signatures exactly once (idempotence checked under the
-          // sigs table's stripe lock — a retried fold cannot
-          // double-append)
-          graft.etl.DurableArtifacts.appendBucketed(
-            s2, sigsTable(d), nb, Seq("doc_id"), Seq("doc_id"),
-            alreadyFolded = cur => !cur.filter(arrP).isEmpty) {
-            sigs.filter(arrP)
-          }
-          // (b) label fold: star edges off yesterday's labels +
-          // today's delta pair evidence, one ~2-round CC
-          val star = s2.table(idxLabelsTable(d))
-            .filter(col("doc_id") =!= col("cluster"))
-            .select(col("doc_id").as("d1"), col("cluster").as("d2"))
-          val delta = DedupQueries.deltaIdxPairsArtifact(s2, d)
-            .unionByName(DedupQueries.deltaBatchPairsArtifact(s2, d))
-          graft.operators.ConnectedComponents.run(
-            star.unionByName(delta), "d1", "d2",
-            Tables(s2, d, "documents")
-              .filter(col("doc_id") % 10 =!= 7)
-              .select(col("doc_id")), "doc_id")
-            .select(col("id").as("doc_id"), col("cluster"))
-        }
-        val labels = foldScan
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try { labels.count(); Art(labels,
-          Seq(sigsTable(d), idxLabelsTable(d), foldLabelsTable(d))) }
-        catch { case t: Throwable =>
-          labels.unpersist(blocking = false); throw t }
-      }.labels
-
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
+        // (b) label fold: star edges off yesterday's labels +
+        // today's delta pair evidence, one ~2-round CC
+        val star = s.table(idxLabelsTable(dir))
+          .filter(col("doc_id") =!= col("cluster"))
+          .select(col("doc_id").as("d1"), col("cluster").as("d2"))
+        val delta = DedupQueries.deltaIdxPairsArtifact(s, dir)
+          .unionByName(DedupQueries.deltaBatchPairsArtifact(s, dir))
+        graft.operators.ConnectedComponents.run(
+          star.unionByName(delta), "d1", "d2",
+          Tables(s, dir, "documents")
+            .filter(col("doc_id") % 10 =!= 7)
+            .select(col("doc_id")), "doc_id")
+          .select(col("id").as("doc_id"), col("cluster"))
+      }
+      b.persist(foldScan)
+    }
   }
 
   /** Spec/lifecycle hooks for the fold artifacts. */
@@ -581,16 +573,6 @@ object BuildQueries extends QueryPack {
     FoldArtifacts.sigsTable(dir)
   private[graft] def foldLabels(s: SparkSession, dir: String): DataFrame =
     FoldArtifacts(s, dir)
-
-  /** Release the b-family durable fold artifacts for one corpus dir
-    * (the [[DedupQueries.releaseArtifacts]] lifecycle). */
-  def releaseArtifacts(s: SparkSession, dir: String): Unit = {
-    FoldArtifacts.release(s, dir)
-    ForgetArtifacts.release(s, dir)
-    ScrubArtifacts.release(s, dir)
-    lmForgetReg.release(s, dir)
-    keptForgetReg.release(s, dir)
-  }
 
   /** b5's keyed forget batch: doc_id ≡ 5 (mod 11) — decorrelated from
     * the source key (%20), the arrival split (%7) and the bench split
@@ -622,10 +604,10 @@ object BuildQueries extends QueryPack {
     * documents-minus-batch in DuckDB, so retraction ≡ rebuild is
     * hash-gated per row. */
   private object ForgetArtifacts {
-    final case class Art(view: DataFrame, tables: Seq[String])
-    private val reg = new graft.ArtifactRegistry[Art](a => Seq(a.view),
-      onRetire = a => a.tables.foreach(t =>
-        graft.etl.DurableArtifacts.drop(a.view.sparkSession, t)))
+    private val reg = new graft.ArtifactRegistry[DataFrame](
+      onRetire = (s, dir) =>
+        Seq(sigsTable(dir), foldLabelsTable(dir), idxLabelsTable(dir))
+          .foreach(graft.etl.DurableArtifacts.drop(s, _)))
 
     def sigsTable(dir: String): String =
       s"graft_b_fsigs_${graft.ArtifactRegistry.dirTag(dir)}"
@@ -634,43 +616,35 @@ object BuildQueries extends QueryPack {
     def idxLabelsTable(dir: String): String =
       s"graft_b_fidxlabels_${graft.ArtifactRegistry.dirTag(dir)}"
 
-    def apply(s: SparkSession, dir: String): Art =
-      reg(s, dir) { (s2, d) =>
-        FoldArtifacts(s2, d) // the pre-forget snapshot must exist
-        val nb = s2.conf.get("spark.sql.shuffle.partitions", "32").toInt
-        val forget = Tables(s2, d, "documents")
-          .filter(isForgotten(col("doc_id"))).select(col("doc_id"))
-        // surviving pair evidence over the non-bench universe (edges
-        // touching a forgotten endpoint die with it)
-        val pairs = DedupQueries.d3PairsArtifact(s2, d)
-          .filter(col("d1") % 10 =!= 7 && col("d2") % 10 =!= 7)
-          .select(col("d1"), col("d2"))
-        graft.etl.DurableArtifacts.bucketedTable(
-          s2, sigsTable(d), nb, Seq("doc_id"), Seq("doc_id")) {
-          s2.table(FoldArtifacts.sigsTable(d))
-            .join(forget, Seq("doc_id"), "left_anti")
-        }
-        graft.etl.DurableArtifacts.bucketedTable(
-          s2, foldLabelsTable(d), nb, Seq("doc_id"), Seq("doc_id")) {
-          graft.etl.Forget.retractLabels(
-            s2.table(FoldArtifacts.foldLabelsTable(d)), pairs, forget)
-        }
-        val idxScan = graft.etl.DurableArtifacts.bucketedTable(
-          s2, idxLabelsTable(d), nb, Seq("doc_id"), Seq("doc_id")) {
-          graft.etl.Forget.retractLabels(
-            s2.table(FoldArtifacts.idxLabelsTable(d)),
-            pairs.filter(!DedupQueries.isDeltaArrival(col("d1")) &&
-              !DedupQueries.isDeltaArrival(col("d2"))), forget)
-        }
-        val v = idxScan
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try { v.count(); Art(v,
-          Seq(sigsTable(d), foldLabelsTable(d), idxLabelsTable(d))) }
-        catch { case t: Throwable =>
-          v.unpersist(blocking = false); throw t }
+    def apply(s: SparkSession, dir: String): DataFrame = reg(s, dir) { b =>
+      FoldArtifacts(s, dir) // the pre-forget snapshot must exist
+      val nb = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val forget = Tables(s, dir, "documents")
+        .filter(isForgotten(col("doc_id"))).select(col("doc_id"))
+      // surviving pair evidence over the non-bench universe (edges
+      // touching a forgotten endpoint die with it)
+      val pairs = DedupQueries.d3PairsArtifact(s, dir)
+        .filter(col("d1") % 10 =!= 7 && col("d2") % 10 =!= 7)
+        .select(col("d1"), col("d2"))
+      graft.etl.DurableArtifacts.bucketedTable(
+        s, sigsTable(dir), nb, Seq("doc_id"), Seq("doc_id")) {
+        s.table(FoldArtifacts.sigsTable(dir))
+          .join(forget, Seq("doc_id"), "left_anti")
       }
-
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
+      graft.etl.DurableArtifacts.bucketedTable(
+        s, foldLabelsTable(dir), nb, Seq("doc_id"), Seq("doc_id")) {
+        graft.etl.Forget.retractLabels(
+          s.table(FoldArtifacts.foldLabelsTable(dir)), pairs, forget)
+      }
+      val idxScan = graft.etl.DurableArtifacts.bucketedTable(
+        s, idxLabelsTable(dir), nb, Seq("doc_id"), Seq("doc_id")) {
+        graft.etl.Forget.retractLabels(
+          s.table(FoldArtifacts.idxLabelsTable(dir)),
+          pairs.filter(!DedupQueries.isDeltaArrival(col("d1")) &&
+            !DedupQueries.isDeltaArrival(col("d2"))), forget)
+      }
+      b.persist(idxScan)
+    }
   }
 
   /** b5 — the forget-cascade audit: one row per non-bench doc with
@@ -786,34 +760,26 @@ object BuildQueries extends QueryPack {
   private object ScrubArtifacts {
     final case class Art(path: String,
         report: graft.etl.CorpusLayout.CompactionReport)
-    private val reg = new graft.ArtifactRegistry[Art](_ => Seq.empty,
-      onRetire = a => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(a.path).getParentFile)
-      })
+    private def root(dir: String): String = sys.props("java.io.tmpdir") +
+      "/graft-forget-serving-" + graft.ArtifactRegistry.dirTag(dir)
+    private val reg = new graft.ArtifactRegistry[Art](
+      onRetire = (_, dir) => graft.ArtifactRegistry.deleteDir(root(dir)))
 
-    def apply(s: SparkSession, dir: String): Art =
-      reg(s, dir) { (s2, d) =>
-        val path = sys.props("java.io.tmpdir") + "/graft-forget-serving-" +
-          graft.ArtifactRegistry.dirTag(d) + "/docs"
-        graft.ArtifactRegistry.deleteDirOnExit(
-          new java.io.File(path).getParent)
-        graft.etl.CorpusLayout.writePartitioned(
-          Tables(s2, d, "documents").filter(col("doc_id") % 10 =!= 7),
-          path, Seq("source"), Seq("doc_id"), maxRecordsPerFile = 1 << 20)
-        val rep = graft.etl.MaintenanceLease.withLeaseFenced(s2, path) {
-          fence =>
-            graft.etl.CorpusLayout.scrubPartitioned(s2, path,
-              Seq("source"), Seq("doc_id"), maxRecordsPerFile = 1 << 20,
-              forget = forgetBatch(s2, d), idCol = "doc_id",
-              fence = Some(fence))
-        }
-        Art(path, rep)
+    def apply(s: SparkSession, dir: String): Art = reg(s, dir) { _ =>
+      val path = root(dir) + "/docs"
+      graft.ArtifactRegistry.deleteDirOnExit(root(dir))
+      graft.etl.CorpusLayout.writePartitioned(
+        Tables(s, dir, "documents").filter(col("doc_id") % 10 =!= 7),
+        path, Seq("source"), Seq("doc_id"), maxRecordsPerFile = 1 << 20)
+      val rep = graft.etl.MaintenanceLease.withLeaseFenced(s, path) {
+        fence =>
+          graft.etl.CorpusLayout.scrubPartitioned(s, path,
+            Seq("source"), Seq("doc_id"), maxRecordsPerFile = 1 << 20,
+            forget = forgetBatch(s, dir), idCol = "doc_id",
+            fence = Some(fence))
       }
-
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
+      Art(path, rep)
+    }
   }
 
   /** Spec hooks: the scrubbed tree's path and the scrub's own report
@@ -830,30 +796,27 @@ object BuildQueries extends QueryPack {
     * artifact: a forget batch is processed once and every consumer
     * reads the retracted view (ArtifactRegistry lifecycle); exposed
     * for ForgetSpec's no-forgotten-doc attach gate. */
-  private val lmForgetReg = new graft.ArtifactRegistry[DataFrame](f => Seq(f))
+  private val lmForgetReg = new graft.ArtifactRegistry[DataFrame]()
 
   private[graft] def lmPostForget(s: SparkSession, dir: String): DataFrame =
-    lmForgetReg(s, dir) { (s2, d) =>
-      val p = graft.etl.Forget.retractBigramLm(
-        TextArtifacts.bigrams(s2, d),
-        TextArtifacts.bigramCounts(s2, d),
-        TextArtifacts.lmDoc(s2, d),
-        forgetBatch(s2, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try { p.count(); p }
-      catch { case t: Throwable => p.unpersist(blocking = false); throw t }
+    lmForgetReg(s, dir) { b =>
+      b.persist(graft.etl.Forget.retractBigramLm(
+        TextArtifacts.bigrams(s, dir),
+        TextArtifacts.bigramCounts(s, dir),
+        TextArtifacts.lmDoc(s, dir),
+        forgetBatch(s, dir)))
     }
 
   /** b7's post-forget KEPT set (retracted rates/labels + survivor-min
     * keeper), retraction-once per (session, dir) — the repack and any
     * future consumer read one materialization instead of re-running
     * the label retraction's CC per call. */
-  private val keptForgetReg = new graft.ArtifactRegistry[DataFrame](f => Seq(f))
+  private val keptForgetReg = new graft.ArtifactRegistry[DataFrame]()
 
   private def keptPostForget(s: SparkSession, dir: String): DataFrame =
-    keptForgetReg(s, dir) { (s2, d) =>
-      val forget = forgetBatch(s2, d)
-      val toksPost = TextArtifacts.toks(s2, d)
+    keptForgetReg(s, dir) { b =>
+      val forget = forgetBatch(s, dir)
+      val toksPost = TextArtifacts.toks(s, dir)
         .filter(!isForgotten(col("doc_id")))
         .select(col("doc_id"), col("source"), col("n_words"))
       val rates = mixtureRatesFromMass(toksPost
@@ -861,27 +824,24 @@ object BuildQueries extends QueryPack {
       val train = toksPost.filter(col("doc_id") % 10 =!= 7)
         .join(broadcast(rates), Seq("source"))
         .withColumn("sampled", uniformU < col("sample_rate"))
-      val bad = TextQueries.decontamDropIds(s2, d)
+      val bad = TextQueries.decontamDropIds(s, dir)
         .withColumn("contaminated", lit(true))
-      val pairsSurv = DedupQueries.d3PairsArtifact(s2, d)
+      val pairsSurv = DedupQueries.d3PairsArtifact(s, dir)
         .filter(!isForgotten(col("d1")) && !isForgotten(col("d2")))
         .select(col("d1"), col("d2"))
       val clusters = graft.etl.Forget.retractLabels(
-        DedupQueries.dupClusters(s2, d), pairsSurv, forget)
+        DedupQueries.dupClusters(s, dir), pairsSurv, forget)
       val flags = train
         .join(bad, Seq("doc_id"), "left")
         .join(clusters, Seq("doc_id"))
         .withColumn("clean", col("sampled") && col("contaminated").isNull)
       val keeper = min(when(col("clean"), col("doc_id")))
         .over(Window.partitionBy(col("cluster")))
-      val p = flags
+      b.persist(flags
         .withColumn("kept", col("clean") && col("doc_id") === keeper)
         .filter(col("kept"))
         .select(col("doc_id"), col("source"), col("n_words"))
-        .withColumn("h", md5(col("doc_id").cast("string")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try { p.count(); p }
-      catch { case t: Throwable => p.unpersist(blocking = false); throw t }
+        .withColumn("h", md5(col("doc_id").cast("string"))))
     }
 
   /** b6 — the forget cascade's DERIVATIVE audit (round 17, completing

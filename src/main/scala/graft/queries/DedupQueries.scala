@@ -56,50 +56,26 @@ object DedupQueries extends QueryPack {
     * snapshot, read by every dedup/audit job); the registry mirrors
     * that lifecycle across d2/d3/d6/d10/d13/d17/t19 instead of
     * re-running the kernels per query. Keyed by (session, dir),
-    * persisted + eagerly materialized (the jaccardPairsLeased
-    * convention — parallel stages must not race the cache fill). */
+    * cached through the registry's `persist`. */
   private object DocArtifacts {
     final case class Arts(shingles: DataFrame, sigs: DataFrame,
         pairs3: DataFrame, pairs2: DataFrame)
-    // Bounded LRU residency + race-free release — see ArtifactRegistry
-    private val reg = new graft.ArtifactRegistry[Arts](a =>
-      Seq(a.shingles, a.sigs, a.pairs3, a.pairs2))
+    private val reg = new graft.ArtifactRegistry[Arts]()
 
-    def apply(s: SparkSession, dir: String): Arts = reg(s, dir)(build)
-
-    /** Drop one corpus's cached artifacts (the [[graft.Leased]]
-      * lifecycle: one-shot driver runs rely on session teardown; a
-      * long-lived service releases snapshots it rotates past — and the
-      * registry's LRU bound releases them unprompted past
-      * [[graft.ArtifactRegistry.defaultMaxCorpora]] corpora). */
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
-
-    private def build(s: SparkSession, dir: String): Arts = {
-      // registry build contract: track persists, release on failure
-      val tracked = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def persistEager(df: DataFrame): DataFrame = {
-        val p = df.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        tracked += p
-        p.count()
-        p
-      }
-      try {
-        val shingles = persistEager(withShinglesRaw(s, dir))
-        val sigs = persistEager(shingles.select(col("doc_id"),
-          graft.operators.TextDedup.minhashSig("xs", 16).as("sig")))
-        val pairs3 = persistEager(graft.operators.TextDedup
-          .lshCandidates(sigs, "doc_id", k = 16, bands = bands)
-          .withColumn("sig_matches",
-            call_function("graft_sig_matches", col("sig1"), col("sig2")))
-          .filter(col("sig_matches") >= 12)
-          .select(col("d1"), col("d2"), col("sig_matches")))
-        val pairs2 = persistEager(graft.operators.TextDedup
-          .jaccardPairs(shingles, "doc_id", "xs",
-            threshold = 0.8, maxDf = d2MaxDf))
-        Arts(shingles, sigs, pairs3, pairs2)
-      } catch { case t: Throwable =>
-        tracked.foreach(_.unpersist(blocking = false)); throw t }
+    def apply(s: SparkSession, dir: String): Arts = reg(s, dir) { b =>
+      val shingles = b.persist(withShinglesRaw(s, dir))
+      val sigs = b.persist(shingles.select(col("doc_id"),
+        graft.operators.TextDedup.minhashSig("xs", 16).as("sig")))
+      val pairs3 = b.persist(graft.operators.TextDedup
+        .lshCandidates(sigs, "doc_id", k = 16, bands = bands)
+        .withColumn("sig_matches",
+          call_function("graft_sig_matches", col("sig1"), col("sig2")))
+        .filter(col("sig_matches") >= 12)
+        .select(col("d1"), col("d2"), col("sig_matches")))
+      val pairs2 = b.persist(graft.operators.TextDedup
+        .jaccardPairs(shingles, "doc_id", "xs",
+          threshold = 0.8, maxDf = d2MaxDf))
+      Arts(shingles, sigs, pairs3, pairs2)
     }
   }
 
@@ -110,54 +86,26 @@ object DedupQueries extends QueryPack {
     * read. Bundle granularity = what a query family actually shares. */
   private object SimArtifacts {
     final case class Art(sigs: DataFrame, pairs: DataFrame)
-    private val reg = new graft.ArtifactRegistry[Art](a =>
-      Seq(a.sigs, a.pairs))
+    private val reg = new graft.ArtifactRegistry[Art]()
 
-    def apply(s: SparkSession, dir: String): Art =
-      reg(s, dir) { (s2, d) =>
-        val tracked = scala.collection.mutable.ListBuffer.empty[DataFrame]
-        def persistEager(df: DataFrame): DataFrame = {
-          val p = df.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          tracked += p
-          p.count()
-          p
-        }
-        try {
-          val sigs = persistEager(graft.operators.TextDedup.simhash(
-            TextArtifacts.toks(s2, d)
-              .select(col("doc_id"), explode(col("w")).as("__w"))
-              .groupBy(col("doc_id"), col("__w"))
-              .agg(count(lit(1)).as("__cnt")),
-            "doc_id"))
-          // The CONFIRMED pair set is an index artifact exactly like
-          // DocArtifacts.pairs3 (d3) / pairs2 (d2): computed once per
-          // corpus snapshot, read by every audit — the r18 change
-          // stops d4 re-running the pigeonhole block join per call.
-          val leased = graft.operators.TextDedup
-            .simhashPairsLeased(sigs, "doc_id", maxHamming = 3, nBlocks = 4)
-          val pairs = persistEager(leased.df)
-          // pairs is materialized; the operator's internal projection
-          // cache (a re-persist of the sigs frame above) can go.
-          leased.release()
-          Art(sigs, pairs)
-        } catch { case t: Throwable =>
-          tracked.foreach(_.unpersist(blocking = false)); throw t }
-      }
-
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
-  }
-
-  /** Release the shared dedup index artifacts for one corpus dir —
-    * the [[graft.Leased]] lifecycle hook for long-lived services
-    * rotating corpus snapshots; queries lazily rebuild on next use. */
-  def releaseArtifacts(s: SparkSession, dir: String): Unit = {
-    ClusterArtifacts.release(s, dir)
-    DeltaArtifacts.release(s, dir)
-    DocArtifacts.release(s, dir)
-    SimArtifacts.release(s, dir)
-    SpanArtifacts.release(s, dir)
-    spanForgetReg.release(s, dir)
+    def apply(s: SparkSession, dir: String): Art = reg(s, dir) { b =>
+      val sigs = b.persist(graft.operators.TextDedup.simhash(
+        TextArtifacts.toks(s, dir)
+          .select(col("doc_id"), explode(col("w")).as("__w"))
+          .groupBy(col("doc_id"), col("__w"))
+          .agg(count(lit(1)).as("__cnt")),
+        "doc_id"))
+      // The CONFIRMED pair set is an index artifact exactly like
+      // DocArtifacts.pairs3 (d3) / pairs2 (d2): computed once per
+      // corpus snapshot, read by every audit — the r18 change
+      // stops d4 re-running the pigeonhole block join per call.
+      val leased = graft.operators.TextDedup
+        .simhashPairsLeased(sigs, "doc_id", maxHamming = 3, nBlocks = 4)
+      // once pairs is materialized, the operator's internal projection
+      // cache (a re-persist of the sigs frame above) can go
+      val pairs = try b.persist(leased.df) finally leased.release()
+      Art(sigs, pairs)
+    }
   }
 
   /** TRAIN-ONCE near-dup CLUSTER LABELS `(doc_id, cluster)` — the
@@ -180,33 +128,23 @@ object DedupQueries extends QueryPack {
     * to a bucketed re-scan, never to re-clustering. Explicit release
     * retires the table (onRetire), matching the snapshot lifecycle. */
   private object ClusterArtifacts {
-    private final case class Art(labels: DataFrame, table: String)
-    private val reg = new graft.ArtifactRegistry[Art](a => Seq(a.labels),
-      onRetire = a =>
-        graft.etl.DurableArtifacts.drop(a.labels.sparkSession, a.table))
+    private val reg = new graft.ArtifactRegistry[DataFrame](
+      onRetire = (s, dir) => graft.etl.DurableArtifacts.drop(s, tableName(dir)))
 
     /** Durable-table name for `dir`'s cluster labels (spec hook). */
     private[queries] def tableName(dir: String): String =
       s"graft_d_clusters_${graft.ArtifactRegistry.dirTag(dir)}"
 
-    def apply(s: SparkSession, dir: String): DataFrame =
-      reg(s, dir) { (s2, d) =>
-        val nb = s2.conf.get("spark.sql.shuffle.partitions", "32").toInt
-        val scan = graft.etl.DurableArtifacts.bucketedTable(
-          s2, tableName(d), nb, Seq("doc_id"), Seq("doc_id")) {
-          graft.operators.ConnectedComponents
-            .run(DocArtifacts(s2, d).pairs3.select(col("d1"), col("d2")),
-              "d1", "d2", docs(s2, d).select(col("doc_id")), "doc_id")
-            .select(col("id").as("doc_id"), col("cluster"))
-        }
-        val labels = scan
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try { labels.count(); Art(labels, tableName(d)) }
-        catch { case t: Throwable =>
-          labels.unpersist(blocking = false); throw t }
-      }.labels
-
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
+    def apply(s: SparkSession, dir: String): DataFrame = reg(s, dir) { b =>
+      val nb = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      b.persist(graft.etl.DurableArtifacts.bucketedTable(
+        s, tableName(dir), nb, Seq("doc_id"), Seq("doc_id")) {
+        graft.operators.ConnectedComponents
+          .run(DocArtifacts(s, dir).pairs3.select(col("d1"), col("d2")),
+            "d1", "d2", docs(s, dir).select(col("doc_id")), "doc_id")
+          .select(col("id").as("doc_id"), col("cluster"))
+      })
+    }
   }
 
   /** Spec hooks for the durable-label lifecycle. */
@@ -746,40 +684,25 @@ object DedupQueries extends QueryPack {
       * of re-shuffling the distinct. */
     final case class Art(idxPairs: DataFrame, idxDupIds: DataFrame,
         batchPairs: DataFrame)
-    private val reg = new graft.ArtifactRegistry[Art](
-      a => Seq(a.idxPairs, a.idxDupIds, a.batchPairs))
+    private val reg = new graft.ArtifactRegistry[Art]()
 
-    def apply(s: SparkSession, dir: String): Art =
-      reg(s, dir) { (s2, d) =>
-        val sigs = DocArtifacts(s2, d).sigs
-        val arr = sigs.filter(isDeltaArrival(col("doc_id")))
-        val rest = sigs.filter(col("doc_id") % 10 =!= 7)
-        val hits = graft.operators.TextDedup
-          .lshCandidatesTwoSided(arr, rest, "doc_id", k = 16, bands = bands)
-          .withColumn("m",
-            call_function("graft_sig_matches", col("sig1"), col("sig2")))
-          .filter(col("m") >= 12)
-          .select(col("d1"), col("d2"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val idx = hits.filter(!isDeltaArrival(col("d2")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val idxIds = idx.select(col("d1").as("doc_id")).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val pairs = hits
-          .filter(isDeltaArrival(col("d2")) && col("d1") < col("d2"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          idx.count(); idxIds.count(); pairs.count()
-          hits.unpersist(blocking = false) // folded into the projections
-          Art(idx, idxIds, pairs)
-        } catch { case t: Throwable =>
-          Seq(hits, idx, idxIds, pairs)
-            .foreach(_.unpersist(blocking = false))
-          throw t
-        }
-      }
-
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
+    def apply(s: SparkSession, dir: String): Art = reg(s, dir) { b =>
+      val sigs = DocArtifacts(s, dir).sigs
+      val arr = sigs.filter(isDeltaArrival(col("doc_id")))
+      val rest = sigs.filter(col("doc_id") % 10 =!= 7)
+      val hits = b.persist(graft.operators.TextDedup
+        .lshCandidatesTwoSided(arr, rest, "doc_id", k = 16, bands = bands)
+        .withColumn("m",
+          call_function("graft_sig_matches", col("sig1"), col("sig2")))
+        .filter(col("m") >= 12)
+        .select(col("d1"), col("d2")))
+      val idx = b.persist(hits.filter(!isDeltaArrival(col("d2"))))
+      val idxIds = b.persist(idx.select(col("d1").as("doc_id")).distinct())
+      val pairs = b.persist(hits
+        .filter(isDeltaArrival(col("d2")) && col("d1") < col("d2")))
+      hits.unpersist(blocking = false) // folded into the projections
+      Art(idx, idxIds, pairs)
+    }
   }
 
   /** b2's memoized drop sets (see [[DeltaArtifacts]]). */
@@ -949,23 +872,13 @@ object DedupQueries extends QueryPack {
     * second riding a plan-keyed cache coincidence (d11's internal
     * `rm` persist) instead of a declared artifact. */
   private object SpanArtifacts {
-    private val reg = new graft.ArtifactRegistry[DataFrame](f => Seq(f))
+    private val reg = new graft.ArtifactRegistry[DataFrame]()
 
-    def apply(s: SparkSession, dir: String): DataFrame =
-      reg(s, dir) { (s2, d) =>
-        val p = graft.operators.TextDedup
-          .repeatedSpans(
-            TextArtifacts.toks(s2, d).filter(col("n_words") >= 8),
-            "doc_id", "w", n = 8, maxDf = d9MaxDf,
-            minSpanWords = d9MinSpan)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // single persist: unpersist defensively on a failed count()
-        try { p.count(); p }
-        catch { case t: Throwable =>
-          p.unpersist(blocking = false); throw t }
-      }
-
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
+    def apply(s: SparkSession, dir: String): DataFrame = reg(s, dir) { b =>
+      b.persist(graft.operators.TextDedup.repeatedSpans(
+        TextArtifacts.toks(s, dir).filter(col("n_words") >= 8),
+        "doc_id", "w", n = 8, maxDf = d9MaxDf, minSpanWords = d9MinSpan))
+    }
   }
 
   private def d9(s: SparkSession, dir: String): DataFrame =
@@ -1032,23 +945,21 @@ object DedupQueries extends QueryPack {
     * every span participant, which would gate only the carry leg —
     * the wider batch provably deletes live span rows at sf0.01, so
     * the oracle exercises retract-and-carry, not just carry. */
-  /** d21's retraction result, once per (session, corpus) — the
-    * retractSpans contract returns a persisted frame whose lifecycle
-    * the caller owns; the registry is that owner (released with the
-    * rest of the d-family artifacts). */
-  private val spanForgetReg = new graft.ArtifactRegistry[DataFrame](f => Seq(f))
+  /** d21's retraction result, once per (session, corpus): the
+    * registry caches the retracted mine through its `persist`. */
+  private val spanForgetReg = new graft.ArtifactRegistry[DataFrame]()
 
   private def d21(s: SparkSession, dir: String): DataFrame =
-    spanForgetReg(s, dir) { (s2, d) =>
+    spanForgetReg(s, dir) { b =>
       graft.etl.Forget.retractSpans(
-        TextArtifacts.toks(s2, d).filter(col("n_words") >= 8),
+        TextArtifacts.toks(s, dir).filter(col("n_words") >= 8),
         "doc_id", "w",
-        SpanArtifacts(s2, d),
-        docs(s2, d).filter(
+        SpanArtifacts(s, dir),
+        docs(s, dir).filter(
           (graft.queries.BuildQueries.isForgotten(col("doc_id")) ||
             (col("doc_id") % 13 === 1 && col("doc_id") % 10 =!= 7)))
           .select(col("doc_id")),
-        n = 8, maxDf = d9MaxDf, minSpanWords = d9MinSpan)
+        n = 8, maxDf = d9MaxDf, minSpanWords = d9MinSpan)(b.persist)
     }.orderBy(col("d1"), col("d2"), col("start1"), col("start2"))
 
   private val d21Sql =

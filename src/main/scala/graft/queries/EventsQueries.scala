@@ -1351,35 +1351,25 @@ object EventsQueries extends QueryPack {
     * one directory of a 3-year table, not the table. Written once per
     * (session, corpus) to scratch, overwritten per build. */
   private object ServingLayout {
-    // ArtifactRegistry lifecycle (LRU-bounded, race-free, builds for
-    // different corpora in parallel — the old coarse-locked memo held
-    // one global lock across the full Spark write); onRetire deletes
-    // the serving copy on EXPLICIT release (eviction keeps it so an
-    // in-flight reader's recompute still finds the files; process
-    // exit reclaims it — the path is process-unique via dirTag and
-    // registered with deleteDirOnExit). Path tag is md5 (dirTag): a
-    // hashCode collision would silently serve the other corpus's
-    // facts.
-    private val reg = new graft.ArtifactRegistry[String](_ => Seq.empty,
-      onRetire = path => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(path).getParentFile)
-      })
-    def apply(s: SparkSession, dir: String): String =
-      reg(s, dir) { (s2, d) =>
-        val path = sys.props("java.io.tmpdir") + "/graft-serving-" +
-          graft.ArtifactRegistry.dirTag(d) + "/facts"
-        graft.ArtifactRegistry.deleteDirOnExit(
-          new java.io.File(path).getParent)
-        graft.etl.CorpusLayout.writePartitioned(
-          Tables(s2, d, "events").withColumn("day",
-            date_trunc("DAY", col("ts")).cast("date")),
-          path, Seq("day"), Seq("ts_ns"), maxRecordsPerFile = 1 << 20)
-        path
-      }
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
+    // onRetire deletes the serving copy on EXPLICIT release (eviction
+    // keeps it so an in-flight reader's recompute still finds the
+    // files; process exit reclaims it — the path is process-unique via
+    // dirTag and registered with deleteDirOnExit). Path tag is md5
+    // (dirTag): a hashCode collision would silently serve the other
+    // corpus's facts.
+    private def root(dir: String): String = sys.props("java.io.tmpdir") +
+      "/graft-serving-" + graft.ArtifactRegistry.dirTag(dir)
+    private val reg = new graft.ArtifactRegistry[String](
+      onRetire = (_, dir) => graft.ArtifactRegistry.deleteDir(root(dir)))
+    def apply(s: SparkSession, dir: String): String = reg(s, dir) { _ =>
+      val path = root(dir) + "/facts"
+      graft.ArtifactRegistry.deleteDirOnExit(root(dir))
+      graft.etl.CorpusLayout.writePartitioned(
+        Tables(s, dir, "events").withColumn("day",
+          date_trunc("DAY", col("ts")).cast("date")),
+        path, Seq("day"), Seq("ts_ns"), maxRecordsPerFile = 1 << 20)
+      path
+    }
   }
 
   /** e31 — fact serving off the day-partitioned layout: a Today-style

@@ -84,49 +84,27 @@ object GraphQueries extends QueryPack {
     final case class Arts(deg: DataFrame, edgesDeg: DataFrame,
         edgesDst: DataFrame, nNodes: Long,
         partDeg: DataFrame, oriented: DataFrame, orientedDst: DataFrame,
-        edgeNv: DataFrame, tables: Seq[String])
+        edgeNv: DataFrame)
 
-    // Bounded LRU residency, parallel per-dir builds, race-free
-    // release — see ArtifactRegistry (a release racing an in-flight
-    // build waits for it and then unpersists; a @volatile-flag design
-    // no-ops in that window and leaks all four persisted frames).
-    // onRetire drops the durable bucketed tables too (DROP TABLE on a
-    // managed table removes its warehouse location) — on EXPLICIT
-    // release only; LRU eviction keeps the tables so an in-flight
-    // reader's recompute still finds its lineage roots, and process
-    // exit reclaims them (deleteDirOnExit — names are process-unique).
-    // Routed through DurableArtifacts.drop so the drop serializes on
-    // the same per-table stripe lock as build-or-attach (a raw DROP
-    // could interleave with another session's attach between its
+    private def table(t: String, dir: String): String =
+      s"graft_g_${t}_${graft.ArtifactRegistry.dirTag(dir)}"
+
+    // onRetire drops the durable bucketed tables (DROP TABLE on a
+    // managed table removes its warehouse location) through
+    // DurableArtifacts.drop, so the drop serializes on the same
+    // per-table stripe lock as build-or-attach (a raw DROP could
+    // interleave with another session's attach between its
     // tableExists check and the scan) and refcounts sibling sessions.
     private val reg = new graft.ArtifactRegistry[Arts](
-      a => Seq(a.deg, a.edgesDeg, a.partDeg, a.oriented),
-      onRetire = a => a.tables.foreach(t =>
-        graft.etl.DurableArtifacts.drop(a.deg.sparkSession, t)))
+      onRetire = (s, dir) => Seq("inc", "bip", "bipdst", "oriented",
+        "orienteddst", "edgenv").foreach(t =>
+        graft.etl.DurableArtifacts.drop(s, table(t, dir))))
 
-    def apply(s: SparkSession, dir: String): Arts = reg(s, dir)(build)
+    def apply(s: SparkSession, dir: String): Arts =
+      reg(s, dir)(build(s, dir, _))
 
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
-
-    private def build(s: SparkSession, dir: String): Arts = {
-      // the ArtifactRegistry build contract: track every persist so a
-      // mid-build failure (OOM in the self-join, say) releases what
-      // was already materialized instead of leaking it on every retry
-      val tracked = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def persistEager(df: DataFrame): DataFrame = {
-        val p = df.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        tracked += p
-        p.count()
-        p
-      }
-      try buildInner(s, dir, persistEager)
-      catch { case t: Throwable =>
-        tracked.foreach(_.unpersist(blocking = false)); throw t }
-    }
-
-    private def buildInner(s: SparkSession, dir: String,
-        persistEager: DataFrame => DataFrame): Arts = {
+    private def build(s: SparkSession, dir: String,
+        b: graft.ArtifactRegistry.Build): Arts = {
       // Both edge tables are WRITTEN BUCKETED on src (the join/agg key
       // of every round and closure pass) and every derived frame is
       // RE-ROOTED on the bucketed scan. Two scale properties fall out:
@@ -139,7 +117,6 @@ object GraphQueries extends QueryPack {
       //      never from the fact joins; on a cluster the table also
       //      survives job restarts where cache partitioning doesn't.
       val nb = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      val sfx = graft.ArtifactRegistry.dirTag(dir)
 
       // bipartite customer<->supplier graph (g1/g3)
       // Every table below goes through DurableArtifacts.bucketedTable
@@ -156,14 +133,14 @@ object GraphQueries extends QueryPack {
         .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
         .distinct()
       val edges = graft.etl.DurableArtifacts.bucketedTable(
-        s, s"graft_g_bip_$sfx", nb, Seq("src"), Seq("src", "dst"))(
+        s, table("bip", dir), nb, Seq("src"), Seq("src", "dst"))(
         pairs
           .select((col("ck") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
           .unionAll(pairs.select((col("sk") * 2 + 1).as("src"),
             (col("ck") * 2).as("dst"))))
-      val deg = persistEager(
+      val deg = b.persist(
         edges.groupBy(col("src")).agg(count(lit(1)).as("deg")))
-      val edgesDeg = persistEager(edges.join(deg, "src"))
+      val edgesDeg = b.persist(edges.join(deg, "src"))
       val nNodes = deg.count() // cached — one cheap job
       // dst-keyed serving copy for the g1/g3 broadcast-rank rounds:
       // bucketed AND sorted on (dst, src) with deg(src) attached, so
@@ -174,7 +151,7 @@ object GraphQueries extends QueryPack {
       // edge-sized cache would fight the query caches for memory,
       // and the scan already carries the partitioning+ordering.
       val edgesDst = graft.etl.DurableArtifacts.bucketedTable(
-        s, s"graft_g_bipdst_$sfx", nb, Seq("dst"), Seq("dst", "src"))(
+        s, table("bipdst", dir), nb, Seq("dst"), Seq("dst", "src"))(
         edges.join(deg, "src").select(col("dst"), col("src"), col("deg")))
 
       // part co-occurrence graph (g2): edges + degree-ordered
@@ -190,7 +167,7 @@ object GraphQueries extends QueryPack {
       // distinct). Recompute lineage for every g2 frame re-roots on
       // this scan, never on the lineitem fact scan.
       val inc = graft.etl.DurableArtifacts.bucketedTable(
-        s, s"graft_g_inc_$sfx", nb, Seq("ok"), Seq("ok", "pk"))(
+        s, table("inc", dir), nb, Seq("ok"), Seq("ok", "pk"))(
         Tables(s, dir, "lineitem")
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
           .distinct())
@@ -200,10 +177,10 @@ object GraphQueries extends QueryPack {
       // durable table immediately after
       val orientTmp = scala.collection.mutable.ListBuffer.empty[DataFrame]
       val orientedScan = graft.etl.DurableArtifacts.bucketedTable(
-        s, s"graft_g_oriented_$sfx", nb, Seq("src"), Seq("src", "dst")) {
-        val pEdges = persistEager(incidenceSelfJoin(inc).distinct())
+        s, table("oriented", dir), nb, Seq("src"), Seq("src", "dst")) {
+        val pEdges = b.persist(incidenceSelfJoin(inc).distinct())
         orientTmp += pEdges
-        val partDeg0 = persistEager(pEdges.select(col("u").as("node"))
+        val partDeg0 = b.persist(pEdges.select(col("u").as("node"))
           .unionAll(pEdges.select(col("v").as("node")))
           .groupBy(col("node")).agg(count(lit(1)).as("deg")))
         orientTmp += partDeg0
@@ -217,7 +194,7 @@ object GraphQueries extends QueryPack {
           when(uFirst, col("v")).otherwise(col("u")).as("dst"))
       }
       orientTmp.foreach(_.unpersist(blocking = false)) // folded into oriented
-      val oriented = persistEager(orientedScan)
+      val oriented = b.persist(orientedScan)
       // dst-bucketed serving copy of the oriented edges (the bipdst
       // treatment): g2's closure attaches the dst endpoint's
       // adjacency FIRST off this scan (zero exchange both sides), so
@@ -229,8 +206,8 @@ object GraphQueries extends QueryPack {
       // re-read of the src-bucketed table, written once; scan-only
       // (an edge-sized cache would fight the query caches).
       val orientedDst = graft.etl.DurableArtifacts.bucketedTable(
-        s, s"graft_g_orienteddst_$sfx", nb, Seq("dst"), Seq("dst", "src"))(
-        s.table(s"graft_g_oriented_$sfx").select(col("dst"), col("src")))
+        s, table("orienteddst", dir), nb, Seq("dst"), Seq("dst", "src"))(
+        s.table(table("oriented", dir)).select(col("dst"), col("src")))
       // CLOSURE-INPUT serving table: the dst endpoint's packed
       // adjacency attached to every oriented edge, bucketed on SRC —
       // the key the closure joins on. Build cost is exactly one pass
@@ -246,9 +223,9 @@ object GraphQueries extends QueryPack {
       // incrementally instead of re-shuffling the adjacency per
       // query.
       val edgeNv = graft.etl.DurableArtifacts.bucketedTable(
-        s, s"graft_g_edgenv_$sfx", nb, Seq("src"), Seq("src", "dst"))(
+        s, table("edgenv", dir), nb, Seq("src"), Seq("src", "dst"))(
         orientedDst.join(
-          s.table(s"graft_g_oriented_$sfx").groupBy(col("src"))
+          s.table(table("oriented", dir)).groupBy(col("src"))
             .agg(call_function("graft_pack_sorted",
               collect_list(col("dst"))).as("nbrs"))
             .select(col("src").as("dst"), col("nbrs").as("nv")),
@@ -257,18 +234,12 @@ object GraphQueries extends QueryPack {
       // oriented rows ARE the undirected edge set (one row per edge),
       // so endpoint counts equal the pEdges-derived degrees — but the
       // recompute path is now a bucketed scan + agg, not a self-join
-      val partDeg = persistEager(
+      val partDeg = b.persist(
         oriented.select(col("src").as("node"))
           .unionAll(oriented.select(col("dst").as("node")))
           .groupBy(col("node")).agg(count(lit(1)).as("deg")))
-      val tables = Seq(s"graft_g_inc_$sfx",
-        s"graft_g_bip_$sfx", s"graft_g_bipdst_$sfx",
-        s"graft_g_oriented_$sfx", s"graft_g_orienteddst_$sfx",
-        s"graft_g_edgenv_$sfx")
-      tables.foreach(t => graft.ArtifactRegistry.deleteDirOnExit(
-        graft.etl.CorpusLayout.managedTablePath(s, t).toString))
       Arts(deg, edgesDeg, edgesDst, nNodes, partDeg, oriented, orientedDst,
-        edgeNv, tables)
+        edgeNv)
     }
   }
 
@@ -284,21 +255,19 @@ object GraphQueries extends QueryPack {
     * persisted degree frame, LRU residency, recompute lineage rooted
     * on the bucketed scan. */
   private object RepeatGraphArtifacts {
-    final case class Arts(edges: DataFrame, deg: DataFrame, nNodes: Long,
-        table: String)
+    final case class Arts(edges: DataFrame, deg: DataFrame, nNodes: Long)
 
+    private def table(dir: String): String =
+      s"graft_g_rep_${graft.ArtifactRegistry.dirTag(dir)}"
     private val reg = new graft.ArtifactRegistry[Arts](
-      a => Seq(a.deg),
-      onRetire = a =>
-        graft.etl.DurableArtifacts.drop(a.deg.sparkSession, a.table))
+      onRetire = (s, dir) => graft.etl.DurableArtifacts.drop(s, table(dir)))
 
-    def apply(s: SparkSession, dir: String): Arts = reg(s, dir)(build)
+    def apply(s: SparkSession, dir: String): Arts =
+      reg(s, dir)(build(s, dir, _))
 
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
-
-    private def build(s: SparkSession, dir: String): Arts = {
+    private def build(s: SparkSession, dir: String,
+        b: graft.ArtifactRegistry.Build): Arts = {
       val nb = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      val tbl = s"graft_g_rep_${graft.ArtifactRegistry.dirTag(dir)}"
       val pairs = Tables(s, dir, "orders")
         .join(Tables(s, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))
@@ -310,24 +279,16 @@ object GraphQueries extends QueryPack {
       // refcounted by DurableArtifacts) instead of rewriting it
       // underneath the first session's scans
       val edges = graft.etl.DurableArtifacts.bucketedTable(
-        s, tbl, nb, Seq("src"), Seq("src", "dst")) {
+        s, table(dir), nb, Seq("src"), Seq("src", "dst")) {
         pairs
           .select((col("ck") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
           .unionAll(pairs.select((col("sk") * 2 + 1).as("src"),
             (col("ck") * 2).as("dst")))
       }
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nNodes = deg.count()
-      Arts(edges, deg, nNodes, tbl)
+      val deg = b.persist(
+        edges.groupBy(col("src")).agg(count(lit(1)).as("deg")))
+      Arts(edges, deg, deg.count())
     }
-  }
-
-  /** Release the shared graph artifacts for one corpus dir (the
-    * [[DedupQueries.releaseArtifacts]] lifecycle). */
-  def releaseArtifacts(s: SparkSession, dir: String): Unit = {
-    GraphArtifacts.release(s, dir)
-    RepeatGraphArtifacts.release(s, dir)
   }
 
   /** src-ordered sequential sum of `c` per `dst` — one row per dst,

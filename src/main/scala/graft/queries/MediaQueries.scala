@@ -103,11 +103,11 @@ object MediaQueries extends QueryPack {
     * the cluster step (m4's CC input) — computed once per corpus
     * snapshot, read by both. */
   private object PairArtifacts {
-    private val reg = new graft.ArtifactRegistry[DataFrame](f => Seq(f))
+    private val reg = new graft.ArtifactRegistry[DataFrame]()
 
     def apply(s: SparkSession, dir: String): DataFrame =
-      reg(s, dir) { (s2, d) =>
-        val f = media(s2, d)
+      reg(s, dir) { b =>
+        val f = media(s, dir)
           .withColumn("frames", Multimodal.frameSample(col("bytes"), 4, 16))
           .select(col("media_id"), explode(col("frames")).as("fr"))
           .select(col("media_id"),
@@ -116,26 +116,14 @@ object MediaQueries extends QueryPack {
         val hot = f.groupBy(col("ahash")).agg(count(lit(1)).as("__df"))
           .filter(col("__df") > 16).select("ahash")
         val capped = f.join(broadcast(hot), Seq("ahash"), "left_anti")
-        val p = capped.as("a").hint("shuffle_hash")
+        b.persist(capped.as("a").hint("shuffle_hash")
           .join(capped.as("b").hint("shuffle_hash"),
             col("a.ahash") === col("b.ahash") &&
               col("a.media_id") < col("b.media_id"))
           .groupBy(col("a.media_id").as("id1"), col("b.media_id").as("id2"))
-          .agg(count(lit(1)).as("shared_frames"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // single persist: unpersist defensively on a failed count()
-        try { p.count(); p }
-        catch { case t: Throwable =>
-          p.unpersist(blocking = false); throw t }
+          .agg(count(lit(1)).as("shared_frames")))
       }
-
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
   }
-
-  /** Release the shared media artifacts for one corpus dir (the
-    * [[DedupQueries.releaseArtifacts]] lifecycle). */
-  def releaseArtifacts(s: SparkSession, dir: String): Unit =
-    PairArtifacts.release(s, dir)
 
   private val m3Sql =
     """WITH m AS (SELECT doc_id AS media_id, hex(encode(text)) AS hx,

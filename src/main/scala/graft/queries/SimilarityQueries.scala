@@ -77,25 +77,20 @@ object SimilarityQueries extends QueryPack {
     * depends only on the corpus (one posexplode+agg pass over every
     * embedding), so it is a TRAIN-ONCE index artifact exactly like
     * the PQ codebooks ([[PqArtifacts]]): computed once per (session,
-    * corpus dir), persisted + eagerly materialized, broadcast (k
-    * rows) by every consumer. Before this registry each ANN query
-    * re-trained the quantizer per call — the one corpus-sized stage
-    * in their plans that wasn't serving work. */
+    * corpus dir), cached, broadcast (k rows) by every consumer.
+    * Before this registry each ANN query re-trained the quantizer per
+    * call — the one corpus-sized stage in their plans that wasn't
+    * serving work. Retiring it also drops s28's durable post-forget
+    * quantizer (refcounted DurableArtifacts.drop, no-op if s28 never
+    * ran for this dir): s28 derives that table from this one. */
   private object CentroidArtifacts {
-    private val reg = new graft.ArtifactRegistry[DataFrame](f => Seq(f))
+    private val reg = new graft.ArtifactRegistry[DataFrame](
+      onRetire = (s, dir) =>
+        graft.etl.DurableArtifacts.drop(s, forgetCentsTableName(dir)))
 
-    def apply(s: SparkSession, dir: String): DataFrame =
-      reg(s, dir) { (s2, d) =>
-        val p = centroidsBuild(
-          emb(s2, d).select(col("label"), col("v")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // single persist: unpersist defensively on a failed count()
-        try { p.count(); p }
-        catch { case t: Throwable =>
-          p.unpersist(blocking = false); throw t }
-      }
-
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
+    def apply(s: SparkSession, dir: String): DataFrame = reg(s, dir) { b =>
+      b.persist(centroidsBuild(emb(s, dir).select(col("label"), col("v"))))
+    }
   }
 
   /** s2 — IVF-style ANN: per-label centroids as the coarse quantizer;
@@ -731,45 +726,24 @@ object SimilarityQueries extends QueryPack {
     * ONCE and persisted as index artifacts that every search and
     * audit then reads; the registry mirrors that lifecycle instead
     * of re-running the Lloyd chains per query. Keyed by (session,
-    * dir); frames are persisted + eagerly materialized (the
-    * jaccardPairsLeased convention). */
+    * dir); frames are cached through the registry's `persist`. */
   private object PqArtifacts {
     final case class Arts(cells: DataFrame, cents: DataFrame,
         subs: Seq[(DataFrame, DataFrame)], recon: DataFrame)
-    // Bounded LRU residency + race-free release — see ArtifactRegistry
-    private val reg = new graft.ArtifactRegistry[Arts](a =>
-      a.cells +: a.cents +: a.recon +: a.subs.flatMap(t => Seq(t._1, t._2)))
+    private val reg = new graft.ArtifactRegistry[Arts]()
 
-    def apply(s: SparkSession, dir: String): Arts = reg(s, dir)(build)
+    def apply(s: SparkSession, dir: String): Arts =
+      reg(s, dir)(build(s, dir, _))
 
-    /** Drop one corpus's cached artifacts (the [[graft.Leased]]
-      * lifecycle — see DocArtifacts.release). */
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
-
-    private def build(s: SparkSession, dir: String): Arts = {
-      // registry build contract: track persists, release on failure
-      val tracked = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def persistEager(df: DataFrame): DataFrame = {
-        val p = df.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        tracked += p
-        p.count()
-        p
-      }
-      try buildInner(s, dir, persistEager)
-      catch { case t: Throwable =>
-        tracked.foreach(_.unpersist(blocking = false)); throw t }
-    }
-
-    private def buildInner(s: SparkSession, dir: String,
-        persistEager: DataFrame => DataFrame): Arts = {
+    private def build(s: SparkSession, dir: String,
+        b: graft.ArtifactRegistry.Build): Arts = {
       val base = evec(s, dir)
       // coarse quantizer: centroids AND assignments both persist (the
       // multi-probe sweep ranks cells by centroid distance per query)
       val coarse0 = base.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("v").as("cv"), col("vv").as("cc"))
-      val cents = persistEager(centroidUpdate(assign(base, coarse0)))
-      val cells = persistEager(assign(base, cents)
+      val cents = b.persist(centroidUpdate(assign(base, coarse0)))
+      val cells = b.persist(assign(base, cents)
         .select(col("vec_id"), col("cluster").as("cell")))
       val subs = (0 until 4).map { j =>
         val e = base
@@ -778,14 +752,14 @@ object SimilarityQueries extends QueryPack {
         val c0 = e.filter(col("vec_id") < 8)
           .select(col("vec_id").as("cid"), col("v").as("cv"), col("vv").as("cc"))
         val cb = centroidUpdate(assign(e, c0))
-        val codes = persistEager(assign(e, cb)
+        val codes = b.persist(assign(e, cb)
           .select(col("vec_id"), col("cluster").as(s"cl$j"),
             col("d2").as(s"d$j")))
-        (codes, persistEager(cb.select(col("cid").as(s"cl$j"), col("cv").as(s"cv$j"))))
+        (codes, b.persist(cb.select(col("cid").as(s"cl$j"), col("cv").as(s"cv$j"))))
       }
       val codeIds = subs.zipWithIndex.map { case ((c, _), j) => c.drop(s"d$j") }
         .reduce(_.join(_, "vec_id"))
-      val recon = persistEager(subs.map(_._2)
+      val recon = b.persist(subs.map(_._2)
         .zipWithIndex.foldLeft(codeIds) { case (acc, (cb, j)) =>
           acc.join(broadcast(cb), s"cl$j")
         }
@@ -796,47 +770,25 @@ object SimilarityQueries extends QueryPack {
     }
   }
 
-  /** Release the shared PQ index artifacts for one corpus dir (see
-    * [[DedupQueries.releaseArtifacts]] — same lifecycle). */
-  def releaseArtifacts(s: SparkSession, dir: String): Unit = {
-    PqArtifacts.release(s, dir)
-    BruteCandArtifacts.release(s, dir)
-    CentroidArtifacts.release(s, dir)
-    BaseCentroidArtifacts.release(s, dir)
-    SplitArtifacts.release(s, dir)
-    bm25Reg.release(s, dir)
-    graft.etl.DurableArtifacts.drop(s, forgetCentsTableName(dir))
-    graft.etl.DurableArtifacts.drop(s, splitCentsTableName(dir))
-  }
-
   /** The FROZEN (base-only, vec_id % 5 ≠ 0) coarse quantizer s22
     * audits and s23 maintains — its own train-once artifact, shared
     * so the watch and the act stages price one posexplode+agg pass
     * between them instead of one each per call. */
   private object BaseCentroidArtifacts {
-    private final case class Art(cents: DataFrame, dir: String)
     // retiring the frozen-quantizer cell also drops s23's durable
     // maintained-quantizer table (refcounted DurableArtifacts.drop,
     // no-op if s23 never ran for this dir) — the same ownership
     // FoldArtifacts has over the b4 fold tables, so an explicit
-    // releaseArtifacts retires the WHOLE s-family durable surface,
-    // not just the in-memory frames
-    private val reg = new graft.ArtifactRegistry[Art](a => Seq(a.cents),
-      onRetire = a => graft.etl.DurableArtifacts.drop(
-        a.cents.sparkSession, maintainedCentsTableName(a.dir)))
+    // release retires the WHOLE s-family durable surface, not just
+    // the in-memory frames
+    private val reg = new graft.ArtifactRegistry[DataFrame](
+      onRetire = (s, dir) =>
+        graft.etl.DurableArtifacts.drop(s, maintainedCentsTableName(dir)))
 
-    def apply(s: SparkSession, dir: String): DataFrame =
-      reg(s, dir) { (s2, d) =>
-        val p = centroidsBuild(
-          emb(s2, d).filter(col("vec_id") % 5 =!= 0)
-            .select(col("label"), col("v")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try { p.count(); Art(p, d) }
-        catch { case t: Throwable =>
-          p.unpersist(blocking = false); throw t }
-      }.cents
-
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
+    def apply(s: SparkSession, dir: String): DataFrame = reg(s, dir) { b =>
+      b.persist(centroidsBuild(emb(s, dir).filter(col("vec_id") % 5 =!= 0)
+        .select(col("label"), col("v"))))
+    }
   }
 
   /** s10 — product quantization (PQ) codebook training + encoding:
@@ -1679,28 +1631,21 @@ object SimilarityQueries extends QueryPack {
     * ground truth is computed once and read by every audit query, so
     * neither s19 nor s21 re-pays the corpus×query scan per call. */
   private object BruteCandArtifacts {
-    private val reg = new graft.ArtifactRegistry[DataFrame](f => Seq(f))
+    private val reg = new graft.ArtifactRegistry[DataFrame]()
 
     def apply(s: SparkSession, dir: String): DataFrame =
-      reg(s, dir) { (s2, d) =>
-        val e = emb(s2, d).select(col("vec_id"), col("v"), col("norm"))
+      reg(s, dir) { b =>
+        val e = emb(s, dir).select(col("vec_id"), col("v"), col("norm"))
         val q = e.filter(col("vec_id") < 8)
         val wTop = Window.partitionBy(col("qid"))
           .orderBy(col("cos").desc, col("nid"))
-        val p = q.as("a").join(e.as("b"), col("a.vec_id") =!= col("b.vec_id"))
+        b.persist(q.as("a").join(e.as("b"), col("a.vec_id") =!= col("b.vec_id"))
           .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"),
             fround(dot(col("a.v"), col("b.v")) / (col("a.norm") * col("b.norm")), 6)
               .as("cos"))
           .withColumn("rk", row_number().over(wTop)).filter(col("rk") <= 12)
-          .select(col("qid"), col("nid"), col("cos"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // single persist: unpersist defensively on a failed count()
-        try { p.count(); p }
-        catch { case t: Throwable =>
-          p.unpersist(blocking = false); throw t }
+          .select(col("qid"), col("nid"), col("cos")))
       }
-
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
   }
 
   /** The MMR greedy core shared by s19 (over brute candidates) and
@@ -2736,67 +2681,56 @@ object SimilarityQueries extends QueryPack {
     * subcell assignment and the ADC candidate frame are index
     * artifacts — built once per (session, corpus), read by every
     * serving call; the durable subcell quantizer is build-or-attach
-    * through [[graft.etl.DurableArtifacts]]. */
+    * through [[graft.etl.DurableArtifacts]] and dropped when the cell
+    * is released. */
   private object SplitArtifacts {
     final case class Art(subs: DataFrame, cands: DataFrame)
-    private val reg = new graft.ArtifactRegistry[Art](a =>
-      Seq(a.subs, a.cands))
+    private val reg = new graft.ArtifactRegistry[Art](
+      onRetire = (s, dir) =>
+        graft.etl.DurableArtifacts.drop(s, splitCentsTableName(dir)))
 
-    def apply(s: SparkSession, dir: String): Art = reg(s, dir) { (s2, d) =>
-      val tracked = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      def persistEager(df: DataFrame): DataFrame = {
-        val p = df.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        tracked += p
-        p.count()
-        p
+    def apply(s: SparkSession, dir: String): Art = reg(s, dir) { b =>
+      val arts = PqArtifacts(s, dir)
+      val base = evec(s, dir)
+      val occ = arts.cells.groupBy(col("cell")).agg(count(lit(1)).as("occ"))
+      val proj = base.join(arts.cells, "vec_id")
+        .withColumn("proj", fround(dot(col("v"), typedLit(splitAxis)), 6))
+        .select(col("vec_id"), col("cell"), col("proj"))
+      // global rank within cell WITHOUT a per-cell window funnel:
+      // the bucketed prefix-sum (bucket = coarse projection range,
+      // monotone in proj) + in-bucket local rank — b3's shape
+      val ranked0 = graft.operators.OffsetWindow.prefixSum(
+        proj, Seq("cell"),
+        bucket = floor(col("proj") * 16).cast("long"),
+        order = Seq(col("proj"), col("vec_id")),
+        weight = lit(1L), out = "rk")
+      val subs = b.persist(ranked0.join(broadcast(occ), "cell")
+        .withColumn("nsplit",
+          expr(s"(occ + ${s29TargetOcc - 1}) div $s29TargetOcc"))
+        .withColumn("sub", expr("((rk - 1) * nsplit) div occ"))
+        .select(col("vec_id"), col("cell"), col("sub")))
+      val subCents = subs.join(base, "vec_id")
+        .select(col("cell"), col("sub"),
+          posexplode(col("v")).as(Seq("pos", "x")))
+        .groupBy(col("cell"), col("sub"), col("pos"))
+        .agg(avg(col("x")).as("m"))
+        .groupBy(col("cell"), col("sub"))
+        .agg(expr(
+          "transform(array_sort(collect_list(struct(pos, m))), s -> s.m)")
+          .as("scv"))
+        .withColumn("scc", dot(col("scv"), col("scv")))
+      graft.etl.DurableArtifacts.bucketedTable(
+        s, splitCentsTableName(dir), 1, Seq("cell"), Seq("cell", "sub")) {
+        subCents
       }
-      try {
-        val arts = PqArtifacts(s2, d)
-        val base = evec(s2, d)
-        val occ = arts.cells.groupBy(col("cell")).agg(count(lit(1)).as("occ"))
-        val proj = base.join(arts.cells, "vec_id")
-          .withColumn("proj", fround(dot(col("v"), typedLit(splitAxis)), 6))
-          .select(col("vec_id"), col("cell"), col("proj"))
-        // global rank within cell WITHOUT a per-cell window funnel:
-        // the bucketed prefix-sum (bucket = coarse projection range,
-        // monotone in proj) + in-bucket local rank — b3's shape
-        val ranked0 = graft.operators.OffsetWindow.prefixSum(
-          proj, Seq("cell"),
-          bucket = floor(col("proj") * 16).cast("long"),
-          order = Seq(col("proj"), col("vec_id")),
-          weight = lit(1L), out = "rk")
-        val subs = persistEager(ranked0.join(broadcast(occ), "cell")
-          .withColumn("nsplit",
-            expr(s"(occ + ${s29TargetOcc - 1}) div $s29TargetOcc"))
-          .withColumn("sub", expr("((rk - 1) * nsplit) div occ"))
-          .select(col("vec_id"), col("cell"), col("sub")))
-        val subCents = subs.join(base, "vec_id")
-          .select(col("cell"), col("sub"),
-            posexplode(col("v")).as(Seq("pos", "x")))
-          .groupBy(col("cell"), col("sub"), col("pos"))
-          .agg(avg(col("x")).as("m"))
-          .groupBy(col("cell"), col("sub"))
-          .agg(expr(
-            "transform(array_sort(collect_list(struct(pos, m))), s -> s.m)")
-            .as("scv"))
-          .withColumn("scc", dot(col("scv"), col("scv")))
-        graft.etl.DurableArtifacts.bucketedTable(
-          s2, splitCentsTableName(d), 1, Seq("cell"), Seq("cell", "sub")) {
-          subCents
-        }
-        // probed scoring + full-cell truth both read the candidates
-        // (the diamond rule; row width matches the cached recon)
-        val cands = persistEager(
-          arts.recon.join(subs, "vec_id").join(base, "vec_id")
-            .select(col("vec_id").as("cid_"), col("cell"), col("sub"),
-              col("r"), col("rr"), col("v").as("xv"), col("vv").as("xx")))
-        Art(subs, cands)
-      } catch { case t: Throwable =>
-        tracked.foreach(_.unpersist(blocking = false)); throw t }
+      // probed scoring + full-cell truth both read the candidates
+      // (the diamond rule; row width matches the cached recon)
+      val cands = b.persist(
+        arts.recon.join(subs, "vec_id").join(base, "vec_id")
+          .select(col("vec_id").as("cid_"), col("cell"), col("sub"),
+            col("r"), col("rr"), col("v").as("xv"), col("vv").as("xx")))
+      Art(subs, cands)
     }
-
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
   }
 
   /** s29 — IVF CELL-COUNT ADAPTATION (round 17, bounding the cost of
@@ -3109,22 +3043,13 @@ object SimilarityQueries extends QueryPack {
     * distinct first-4 words of the query doc's own text, term-set
     * pushdown, top-20 per query) — s27 and s30 both fuse against it.
     * Built ONCE per (session, corpus) via the ArtifactRegistry
-    * (persisted + eagerly materialized — every caller fuses it 2-3
-    * times, and per-call persists would leak an entry per run). */
-  private val bm25Reg = new graft.ArtifactRegistry[DataFrame](f => Seq(f))
+    * (cached — every caller fuses it 2-3 times, and per-call
+    * persists would leak an entry per run). */
+  private val bm25Reg = new graft.ArtifactRegistry[DataFrame]()
 
   private def bm25Top(s: SparkSession, dir: String, L: Int): DataFrame = {
     require(L == 20, "the shared BM25 artifact is built at L = 20")
-    bm25Reg(s, dir)(bm25TopBuild)
-  }
-
-  private def bm25TopBuild(s: SparkSession, dir: String): DataFrame = {
-    val sparse = bm25Sparse(s, dir, 20)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager under the registry's failure contract
-    try { sparse.count(); sparse }
-    catch { case t: Throwable =>
-      sparse.unpersist(blocking = false); throw t }
+    bm25Reg(s, dir)(_.persist(bm25Sparse(s, dir, 20)))
   }
 
   /** The BM25 sparse top-`L` list (qid, nid, srk), lazy: s25 reads it

@@ -4,7 +4,6 @@ import graft.Tables
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Shared TOKENIZED-CORPUS artifacts for the text family — the
   * tokenize-once layer under t8/t10/t11/t17/t18/t20/t25, d9, and the
@@ -32,9 +31,8 @@ import org.apache.spark.storage.StorageLevel
   *    per-doc fixed-point scores (t10's core, see its scaladoc for
   *    the determinism + salted-join story) shared by t10 and t25.
   *
-  * All persisted MEMORY_AND_DISK + eagerly materialized (the
-  * jaccardPairsLeased convention — parallel stages must not race the
-  * cache fill); eviction degrades to lazy recompute from the parquet
+  * All cached through the registry's `persist` (MEMORY_AND_DISK +
+  * eager count); eviction degrades to lazy recompute from the parquet
   * roots, never to wrong results. At 100 TB the cache becomes a
   * written table (CorpusLayout) — the consumer-side shape (derive
   * from the shared frame, never re-scan the raw corpus) is identical.
@@ -52,32 +50,23 @@ private[graft] object TextArtifacts {
   private[graft] val cabBuilds = new AtomicInteger
   private[graft] val lmBuilds = new AtomicInteger
 
-  /** Single-frame persist-eager build honoring the registry's failure
-    * contract (unpersist on a failed materialization so retries don't
-    * stack cache entries). */
-  private def eager(df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try { p.count(); p }
-    catch { case t: Throwable => p.unpersist(blocking = false); throw t }
-  }
-
-  private val tokReg = new graft.ArtifactRegistry[DataFrame](f => Seq(f))
+  private val tokReg = new graft.ArtifactRegistry[DataFrame]()
 
   def toks(s: SparkSession, dir: String): DataFrame =
-    tokReg(s, dir) { (s2, d) =>
+    tokReg(s, dir) { b =>
       tokBuilds.incrementAndGet()
-      eager(Tables(s2, d, "documents")
+      b.persist(Tables(s, dir, "documents")
         .withColumn("w", split(col("text"), " "))
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
           col("w"), size(col("w")).cast("long").as("n_words")))
     }
 
-  private val gram8Reg = new graft.ArtifactRegistry[DataFrame](f => Seq(f))
+  private val gram8Reg = new graft.ArtifactRegistry[DataFrame]()
 
   def grams8(s: SparkSession, dir: String): DataFrame =
-    gram8Reg(s, dir) { (s2, d) =>
+    gram8Reg(s, dir) { b =>
       gram8Builds.incrementAndGet()
-      eager(toks(s2, d)
+      b.persist(toks(s, dir)
         .filter(col("n_words") >= 8)
         .select(col("doc_id"), col("source"), col("n_words"),
           graft.operators.TextDedup.shingleHashes("w", 8).as("xs")))
@@ -97,7 +86,7 @@ private[graft] object TextArtifacts {
         .as(Seq("pos", "g")))
       .select(col("doc_id"), col("pos"), col("g.a").as("a"), col("g.b").as("b"))
 
-  private val cabReg = new graft.ArtifactRegistry[DataFrame](f => Seq(f))
+  private val cabReg = new graft.ArtifactRegistry[DataFrame]()
 
   /** Corpus bigram counts `(a, b, cab)` — the bigram-LM numerator
     * (t10/t25 via [[lmDoc]]) AND the collocation support table (t8).
@@ -105,13 +94,13 @@ private[graft] object TextArtifacts {
     * hash agg over [[bigrams]]; exactly the "count table" a
     * production LM/collocation job writes once per snapshot. */
   def bigramCounts(s: SparkSession, dir: String): DataFrame =
-    cabReg(s, dir) { (s2, d) =>
+    cabReg(s, dir) { b =>
       cabBuilds.incrementAndGet()
-      eager(bigrams(s2, d)
+      b.persist(bigrams(s, dir)
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("cab")))
     }
 
-  private val lmReg = new graft.ArtifactRegistry[DataFrame](f => Seq(f))
+  private val lmReg = new graft.ArtifactRegistry[DataFrame]()
 
   /** The LM scoring core: per-doc exact fixed-point bigram scores off
     * an explicit model `(cab, ca)` — factored (round 17) so the forget
@@ -137,23 +126,11 @@ private[graft] object TextArtifacts {
     cab.groupBy(col("a")).agg(sum(col("cab")).as("ca"))
 
   def lmDoc(s: SparkSession, dir: String): DataFrame =
-    lmReg(s, dir) { (s2, d) =>
+    lmReg(s, dir) { b =>
       lmBuilds.incrementAndGet()
-      val bi = bigrams(s2, d)
-      val cab = bigramCounts(s2, d)
+      val bi = bigrams(s, dir)
+      val cab = bigramCounts(s, dir)
       val ca = bi.groupBy(col("a")).agg(count(lit(1)).as("ca"))
-      eager(lmScore(bi, cab, ca))
+      b.persist(lmScore(bi, cab, ca))
     }
-
-  /** Release this corpus dir's tokenized-family artifacts (the
-    * [[graft.Leased]] snapshot-rotation lifecycle; the per-registry
-    * LRU bound releases unprompted past
-    * [[graft.ArtifactRegistry.defaultMaxCorpora]]). Derived bundles
-    * first, the token root last. */
-  def release(s: SparkSession, dir: String): Unit = {
-    lmReg.release(s, dir)
-    cabReg.release(s, dir)
-    gram8Reg.release(s, dir)
-    tokReg.release(s, dir)
-  }
 }

@@ -30,14 +30,6 @@ object TextQueries extends QueryPack {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 
-  /** Release the shared tokenized-corpus artifacts for one corpus dir
-    * (the [[graft.Leased]] snapshot-rotation lifecycle — see
-    * [[TextArtifacts]]); queries lazily rebuild on next use. */
-  def releaseArtifacts(s: SparkSession, dir: String): Unit = {
-    DecontamArtifacts.release(s, dir)
-    TextArtifacts.release(s, dir)
-  }
-
   private val words: Column = split(col("text"), " ")
 
   /** (doc_id, score) under t2's quality formula — shared with d17's
@@ -1151,29 +1143,19 @@ object TextQueries extends QueryPack {
     * threshold function of the corpus, so attach ≡ rebuild; explicit
     * release retires the table with the snapshot. */
   private object DecontamArtifacts {
-    private final case class Art(ids: DataFrame, table: String)
-    private val reg = new graft.ArtifactRegistry[Art](a => Seq(a.ids),
-      onRetire = a =>
-        graft.etl.DurableArtifacts.drop(a.ids.sparkSession, a.table))
+    private val reg = new graft.ArtifactRegistry[DataFrame](
+      onRetire = (s, dir) => graft.etl.DurableArtifacts.drop(s, tableName(dir)))
 
     private[queries] def tableName(dir: String): String =
       s"graft_t_quarantine_${graft.ArtifactRegistry.dirTag(dir)}"
 
-    def apply(s: SparkSession, dir: String): DataFrame =
-      reg(s, dir) { (s2, d) =>
-        val nb = s2.conf.get("spark.sql.shuffle.partitions", "32").toInt
-        val scan = graft.etl.DurableArtifacts.bucketedTable(
-          s2, tableName(d), nb, Seq("doc_id"), Seq("doc_id")) {
-          decontamDropIdsBuild(s2, d)
-        }
-        val p = scan
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try { p.count(); Art(p, tableName(d)) }
-        catch { case t: Throwable =>
-          p.unpersist(blocking = false); throw t }
-      }.ids
-
-    def release(s: SparkSession, dir: String): Unit = reg.release(s, dir)
+    def apply(s: SparkSession, dir: String): DataFrame = reg(s, dir) { b =>
+      val nb = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      b.persist(graft.etl.DurableArtifacts.bucketedTable(
+        s, tableName(dir), nb, Seq("doc_id"), Seq("doc_id")) {
+        decontamDropIdsBuild(s, dir)
+      })
+    }
   }
 
   /** Spec hook for the durable-quarantine lifecycle. */

@@ -32,16 +32,15 @@ class RegistryEvictionRaceSpec extends SparkSpec {
   test("eviction under a running query: reader survives, durable roots survive, re-attach not rebuild") {
     val table = s"graft_race_${ArtifactRegistry.dirTag("race-corpus-a")}"
     @volatile var cellBuilds = 0
-    val reg = new ArtifactRegistry[Bundle](
-      b => Seq(b.frame), maxCorpora = 1,
-      onRetire = _ => DurableArtifacts.drop(spark, table))
-    def buildA(s: org.apache.spark.sql.SparkSession, dir: String): Bundle = {
+    val reg = new ArtifactRegistry[Bundle](maxCorpora = 1,
+      onRetire = (s, _) => DurableArtifacts.drop(s, table))
+    def buildA(b: ArtifactRegistry.Build): Bundle = {
       cellBuilds += 1
       val durable = DurableArtifacts.bucketedTable(
-        s, table, 1, Seq("id"), Seq("id")) {
+        spark, table, 1, Seq("id"), Seq("id")) {
         spark.range(2000).toDF("id")
       }
-      Bundle(durable.withColumn("v", col("id") * 2).persist())
+      Bundle(b.persist(durable.withColumn("v", col("id") * 2)))
     }
 
     val a = reg(spark, "race-corpus-a")(buildA)
@@ -64,8 +63,8 @@ class RegistryEvictionRaceSpec extends SparkSpec {
 
     // memory pressure: corpus B lands, maxCorpora=1 evicts A NOW —
     // mid-query. Eviction unpersists but must NOT run onRetire.
-    reg(spark, "race-corpus-b")((s, _) =>
-      Bundle(s.range(10).toDF("id")))
+    reg(spark, "race-corpus-b")(_ =>
+      Bundle(spark.range(10).toDF("id")))
     // attach-while-retiring: resolve A again immediately — the old
     // cell is gone from the map, so this is a fresh cell build whose
     // durable table must ATTACH (buildCount stays 1), evicting B.

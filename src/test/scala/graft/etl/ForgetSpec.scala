@@ -184,7 +184,7 @@ class ForgetSpec extends SparkSpec {
       (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getLong(4)))
       .toSet
     val got = Forget.retractSpans(docs, "doc_id", "w", spansPre, forget,
-      n = n, maxDf = maxDf, minSpanWords = minSpan)
+      n = n, maxDf = maxDf, minSpanWords = minSpan)(_.localCheckpoint())
     val want = mine(docs.filter(col("doc_id") =!= 3L))
     key(got) shouldBe key(want)
     // the identity is not vacuous: the uncapped (1,2) span APPEARED and
@@ -195,7 +195,7 @@ class ForgetSpec extends SparkSpec {
     val poisoned = spansPre.withColumn("span_words",
       when(col("d1") === 4L, lit(999L)).otherwise(col("span_words")))
     val got2 = Forget.retractSpans(docs, "doc_id", "w", poisoned, forget,
-      n = n, maxDf = maxDf, minSpanWords = minSpan)
+      n = n, maxDf = maxDf, minSpanWords = minSpan)(_.localCheckpoint())
     got2.filter(col("d1") === 4L).select(col("span_words"))
       .collect().map(_.getLong(0)).toSet shouldBe Set(999L)
   }

@@ -211,7 +211,7 @@ class BuildQueriesSpec extends SparkSpec {
     idxPairs.foreach { case (a, b) =>
       withClue(s"pair ($a,$b): ") { lbl(a) shouldBe lbl(b) }
     }
-    BuildQueries.releaseArtifacts(s2, dir)
-    BuildQueries.releaseArtifacts(spark, dir)
+    graft.ArtifactRegistry.release(s2, dir)
+    graft.ArtifactRegistry.release(spark, dir)
   }
 }

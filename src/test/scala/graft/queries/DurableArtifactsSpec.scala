@@ -40,7 +40,7 @@ class DurableArtifactsSpec extends SparkSpec {
     // must survive (s2's cached frame roots its recompute on the
     // scan) and s2 must still read correct labels AFTER the release —
     // the use-after-release hazard the refcount exists to close
-    DedupQueries.releaseArtifacts(spark, sfDir)
+    graft.ArtifactRegistry.release(spark, sfDir)
     spark.catalog.tableExists(table) shouldBe true
     DurableArtifacts.attachCount(table) shouldBe 1
     val labelsAfterSiblingRelease = DedupQueries.dupClusters(s2, sfDir)
@@ -48,7 +48,7 @@ class DurableArtifactsSpec extends SparkSpec {
     labelsAfterSiblingRelease shouldBe labels1
 
     // LAST release retires the durable table (snapshot lifecycle)
-    DedupQueries.releaseArtifacts(s2, sfDir)
+    graft.ArtifactRegistry.release(s2, sfDir)
     spark.catalog.tableExists(table) shouldBe false
     DurableArtifacts.attachCount(table) shouldBe 0
 
@@ -57,7 +57,7 @@ class DurableArtifactsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     DurableArtifacts.buildCount(table) shouldBe builds0 + 1
     labels3 shouldBe labels1
-    DedupQueries.releaseArtifacts(spark, sfDir) // leave no residue
+    graft.ArtifactRegistry.release(spark, sfDir) // leave no residue
   }
 
   test("graph edge tables: a fresh session attaches to all six; last release retires them") {
@@ -79,13 +79,13 @@ class DurableArtifactsSpec extends SparkSpec {
 
     // first release keeps the tables for the attached sibling; the
     // sibling still answers g2 correctly; last release retires
-    GraphQueries.releaseArtifacts(spark, sfDir)
+    graft.ArtifactRegistry.release(spark, sfDir)
     tables.foreach(t => withClue(s"$t: ") {
       spark.catalog.tableExists(t) shouldBe true
     })
     graft.SparkEntry.queries("g2_triangles")(s2, sfDir)
       .collect().toSeq shouldBe r1
-    GraphQueries.releaseArtifacts(s2, sfDir)
+    graft.ArtifactRegistry.release(s2, sfDir)
     tables.foreach(t => withClue(s"$t: ") {
       spark.catalog.tableExists(t) shouldBe false
     })
@@ -104,15 +104,15 @@ class DurableArtifactsSpec extends SparkSpec {
     DurableArtifacts.buildCount(table) shouldBe builds0
     ids2 shouldBe ids1
 
-    TextQueries.releaseArtifacts(spark, sfDir)
+    graft.ArtifactRegistry.release(spark, sfDir)
     spark.catalog.tableExists(table) shouldBe true // s2 still attached
-    TextQueries.releaseArtifacts(s2, sfDir)
+    graft.ArtifactRegistry.release(s2, sfDir)
     spark.catalog.tableExists(table) shouldBe false
 
     val ids3 = TextQueries.decontamDropIds(spark, sfDir)
       .collect().map(_.getLong(0)).sorted
     DurableArtifacts.buildCount(table) shouldBe builds0 + 1
     ids3 shouldBe ids1
-    TextQueries.releaseArtifacts(spark, sfDir)
+    graft.ArtifactRegistry.release(spark, sfDir)
   }
 }

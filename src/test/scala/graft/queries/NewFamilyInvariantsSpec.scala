@@ -239,9 +239,7 @@ class NewFamilyInvariantsSpec extends SparkSpec {
     val d3Before = SparkEntry.queries("d3_minhash_lsh")(spark, sfDir).collect()
     val s10Before = SparkEntry.queries("s10_pq_codes")(spark, sfDir).collect()
     val g2Before = SparkEntry.queries("g2_triangles")(spark, sfDir).collect()
-    DedupQueries.releaseArtifacts(spark, sfDir)
-    SimilarityQueries.releaseArtifacts(spark, sfDir)
-    GraphQueries.releaseArtifacts(spark, sfDir)
+    graft.ArtifactRegistry.release(spark, sfDir)
     // released artifacts rebuild lazily and reproduce the same output
     SparkEntry.queries("d3_minhash_lsh")(spark, sfDir)
       .collect() shouldBe d3Before

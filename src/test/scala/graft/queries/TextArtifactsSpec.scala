@@ -23,7 +23,7 @@ class TextArtifactsSpec extends SparkSpec {
 
   test("token, 8-gram and bigram-LM artifacts each build once per " +
       "(session, dir) across the whole text family") {
-    TextArtifacts.release(spark, sfDir)
+    graft.ArtifactRegistry.release(spark, sfDir)
     val (tok0, g0, cab0, lm0) = (TextArtifacts.tokBuilds.get,
       TextArtifacts.gram8Builds.get, TextArtifacts.cabBuilds.get,
       TextArtifacts.lmBuilds.get)
@@ -47,7 +47,7 @@ class TextArtifactsSpec extends SparkSpec {
       "of reusing a rotated snapshot's frames") {
     SparkEntry.queries("t11_decontam")(spark, sfDir).collect()
     val g0 = TextArtifacts.gram8Builds.get
-    TextArtifacts.release(spark, sfDir)
+    graft.ArtifactRegistry.release(spark, sfDir)
     SparkEntry.queries("t11_decontam")(spark, sfDir).collect()
     TextArtifacts.gram8Builds.get - g0 shouldBe 1
   }
