@@ -42,24 +42,19 @@ object TextDedup {
     * the candidate join at Σ min(df, maxDf)² instead of Σ df²: at
     * 100 TB one boilerplate shingle (df ~ corpus size) is otherwise a
     * quadratic hot key. The hot-shingle list is ≤ |index| / maxDf
-    * entries by construction, hence always broadcastable. */
+    * entries by construction, hence always broadcastable.
+    *
+    * The pairs come leased: the lease's `release()` drops the persisted
+    * shingle-set table once the pairs have been consumed (or cached),
+    * so per-call caches don't accumulate for the session lifetime. */
   def jaccardPairs(docs: DataFrame, idCol: String, xsCol: String,
-      threshold: Double, maxDf: Int = Int.MaxValue): DataFrame =
-    jaccardPairsLeased(docs, idCol, xsCol, threshold, maxDf).df
-
-  /** [[jaccardPairs]] with an explicit cache lifecycle: the returned
-    * lease's `release()` drops the persisted shingle-set table once
-    * the pairs have been consumed — the form a long-lived service
-    * calls so per-request caches don't accumulate for the session
-    * lifetime. */
-  def jaccardPairsLeased(docs: DataFrame, idCol: String, xsCol: String,
       threshold: Double, maxDf: Int = Int.MaxValue): graft.Leased = {
     // The set table feeds FOUR consumers (hot list, both self-join
     // sides, the verify lookups); uncached, each one re-scans the
     // text and re-runs the shingle kernel. Persist it once —
     // MEMORY_AND_DISK so oversized corpora spill instead of OOM (the
     // cluster-scale equivalent is materializing the shingle table
-    // before the pair stage). Lives until session cache clear.
+    // before the pair stage); the lease releases it.
     val sets = docs.select(col(idCol).as("__id"), col(xsCol).as("__xs"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Materialize eagerly: the consumers sit on PARALLEL branches of
@@ -245,14 +240,11 @@ object TextDedup {
     * duplicate candidates + doc-pair distinct). Docs sharing a
     * signature pair off directly with hamming 0, and cross-signature
     * pairs expand through two membership joins — both output-bounded,
-    * so the only remaining quadratic is genuine result size. */
+    * so the only remaining quadratic is genuine result size.
+    *
+    * Leased like [[jaccardPairs]]: `release()` drops the persisted
+    * signature projection. */
   def simhashPairs(simhashes: DataFrame, idCol: String, maxHamming: Int,
-      nBlocks: Int = 4, splitThreshold: Int = 256): DataFrame =
-    simhashPairsLeased(simhashes, idCol, maxHamming, nBlocks, splitThreshold).df
-
-  /** [[simhashPairs]] with an explicit cache lifecycle — see
-    * [[jaccardPairsLeased]]. */
-  def simhashPairsLeased(simhashes: DataFrame, idCol: String, maxHamming: Int,
       nBlocks: Int = 4, splitThreshold: Int = 256): graft.Leased = {
     require(maxHamming < nBlocks, "pigeonhole needs maxHamming < nBlocks")
     val blockBits = 32 / nBlocks

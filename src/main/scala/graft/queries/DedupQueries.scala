@@ -72,9 +72,11 @@ object DedupQueries extends QueryPack {
           call_function("graft_sig_matches", col("sig1"), col("sig2")))
         .filter(col("sig_matches") >= 12)
         .select(col("d1"), col("d2"), col("sig_matches")))
-      val pairs2 = b.persist(graft.operators.TextDedup
-        .jaccardPairs(shingles, "doc_id", "xs",
-          threshold = 0.8, maxDf = d2MaxDf))
+      // once pairs2 is materialized, the operator's shingle-set cache
+      // (a re-persist of the shingles above) can go
+      val leased = graft.operators.TextDedup
+        .jaccardPairs(shingles, "doc_id", "xs", threshold = 0.8, maxDf = d2MaxDf)
+      val pairs2 = try b.persist(leased.df) finally leased.release()
       Arts(shingles, sigs, pairs3, pairs2)
     }
   }
@@ -100,7 +102,7 @@ object DedupQueries extends QueryPack {
       // corpus snapshot, read by every audit — the r18 change
       // stops d4 re-running the pigeonhole block join per call.
       val leased = graft.operators.TextDedup
-        .simhashPairsLeased(sigs, "doc_id", maxHamming = 3, nBlocks = 4)
+        .simhashPairs(sigs, "doc_id", maxHamming = 3, nBlocks = 4)
       // once pairs is materialized, the operator's internal projection
       // cache (a re-persist of the sigs frame above) can go
       val pairs = try b.persist(leased.df) finally leased.release()
@@ -201,7 +203,7 @@ object DedupQueries extends QueryPack {
   private[graft] def d2FreshPlan(s: SparkSession, dir: String): DataFrame =
     graft.operators.TextDedup
       .jaccardPairs(withShinglesRaw(s, dir), "doc_id", "xs",
-        threshold = 0.8, maxDf = d2MaxDf)
+        threshold = 0.8, maxDf = d2MaxDf).df
 
   private val d2Sql =
     s"""WITH ws AS ($withShinglesSql),
@@ -991,7 +993,7 @@ object DedupQueries extends QueryPack {
     val spans = SpanArtifacts(s, dir)
     // rm feeds two consumers (affected-doc list + position anti-join);
     // persist so the whole span pipeline runs once (eager count ends
-    // the parallel cache-fill race — see jaccardPairsLeased)
+    // the parallel cache-fill race — see TextDedup.jaccardPairs)
     val rm = spans.select(col("d2").as("doc_id"),
         explode(sequence(col("start2").cast("long"),
           col("start2").cast("long") + col("span_words") - 1)).as("pos"))
@@ -1170,9 +1172,9 @@ object DedupQueries extends QueryPack {
     * is immune to the d2 length-bias, which is exactly why this
     * operator exists. */
   private def d15(s: SparkSession, dir: String): DataFrame = {
+    // the shingle frame is the cached DocArtifacts artifact: its four
+    // consumers (hot, both join sides, verify) read it, not a re-copy
     val ws = withShingles(s, dir).select(col("doc_id"), col("xs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ws.count() // eager: 4 consumers (hot, both join sides, verify)
     val sh = ws.select(col("doc_id"), explode(col("xs")).as("sh"))
     val hot = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
       .filter(col("df") > d2MaxDf).select("sh")

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryPack, Tables}
 import graft.QueryPack.{dot, fround}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,10 +21,13 @@ import org.apache.spark.sql.functions._
   */
 object SimilarityQueries extends QueryPack {
 
+  /** The one embedding view: the table's columns plus v (double),
+    * vv = ‖v‖² and norm = √vv. */
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "embeddings")
       .withColumn("v", col("embedding").cast("array<double>"))
-      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
+      .withColumn("vv", dot(col("v"), col("v")))
+      .withColumn("norm", sqrt(col("vv")))
 
   /** s1 — brute-force top-k cosine: queries are vec_id < 10, k = 5
     * nearest corpus vectors (self excluded), rank-per-query window. */
@@ -312,13 +315,6 @@ object SimilarityQueries extends QueryPack {
 
   // ---------------------------------------------------------------- s6/d8
 
-  /** Embedding view for the k-means pair: v (double), vv = ‖v‖². */
-  private def evec(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "embeddings")
-      .withColumn("v", col("embedding").cast("array<double>"))
-      .withColumn("vv", dot(col("v"), col("v")))
-      .select(col("vec_id"), col("v"), col("vv"))
-
   /** One k-means assignment pass: nearest centroid by squared L2,
     * ties to the smaller centroid id. `cents` is (cid, cv, cc=‖cv‖²)
     * — k rows, broadcast; the distance expansion ‖v‖²−2·v·c+‖c‖²
@@ -347,14 +343,28 @@ object SimilarityQueries extends QueryPack {
         .as("cv"))
       .withColumn("cc", dot(col("cv"), col("cv")))
 
-  /** Final assignment after a fixed 2-round Lloyd iteration with
-    * deterministic seeding (centroids = vectors vec_id 0..7). */
-  private def kmeansAssign(s: SparkSession, dir: String): DataFrame = {
-    val e = evec(s, dir)
-    val c0 = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("vv").as("cc"))
-    val a1 = assign(e, c0)
-    assign(e, centroidUpdate(a1))
+  /** Round-2 centroids of a fixed 2-round Lloyd iteration over `e`
+    * (vec_id, v, vv) with deterministic seeding (centroids = vectors
+    * vec_id 0..7): one assignment pass, one centroid update. */
+  private def lloydCents(e: DataFrame): DataFrame =
+    centroidUpdate(assign(e, e.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cid"), col("v").as("cv"), col("vv").as("cc"))))
+
+  /** The coarse quantizer, TRAINED ONCE per (session, corpus dir): the
+    * k = 8 Lloyd centroids `(cid, cv, cc)` and the final assignment
+    * `(vec_id, v, vv, cluster, d2)`, both cached through the
+    * registry's `persist`. The assignment is s6/s8/d8/d12's clustering
+    * and the IVF cell table of the PQ legs (s11–s13, s24, s26, s29,
+    * s30), which also read each vector's v/vv from it. */
+  private object CoarseArtifacts {
+    final case class Arts(cents: DataFrame, assign: DataFrame)
+    private val reg = new graft.ArtifactRegistry[Arts]()
+
+    def apply(s: SparkSession, dir: String): Arts = reg(s, dir) { b =>
+      val e = emb(s, dir)
+      val cents = b.persist(lloydCents(e))
+      Arts(cents, b.persist(assign(e, cents)))
+    }
   }
 
   /** s6 — deterministic k-means clustering (k=8, 2 Lloyd rounds,
@@ -370,17 +380,12 @@ object SimilarityQueries extends QueryPack {
     * loop; for convergence-driven runs compose with the d6/CC
     * localCheckpoint-per-round pattern. */
   private def s6(s: SparkSession, dir: String): DataFrame = {
-    // a2 feeds the size table AND the join probe side — unfused, the
-    // second reference re-executes both Lloyd scans (diamond audit);
-    // a count().over(partitionBy(cluster)) window would fix that but
-    // funnel the corpus into k tasks (k = 8 partitions doing all the
-    // work — measured 7% WORSE at sf3). Persist the 3-column
-    // projection instead: assignment runs once, the k-row size table
-    // broadcasts, parallelism stays width-independent of k.
-    val a2 = kmeansAssign(s, dir)
-      .select(col("vec_id"), col("cluster"), col("d2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    a2.count() // eager: ends the parallel cache-fill race
+    // the assignment feeds the size table AND the join probe side; it
+    // is the cached coarse artifact, so neither reference re-runs the
+    // Lloyd scans (a count().over(partitionBy(cluster)) window would
+    // funnel the corpus into k tasks — measured 7% WORSE at sf3); the
+    // k-row size table broadcasts
+    val a2 = CoarseArtifacts(s, dir).assign
     val sizes = a2.groupBy(col("cluster")).agg(count(lit(1)).as("n_members"))
     a2.join(broadcast(sizes), Seq("cluster"))
       .select(col("vec_id"), col("cluster").cast("long").as("cluster"),
@@ -468,14 +473,14 @@ object SimilarityQueries extends QueryPack {
   private[queries] val d8SampleCap = 4000
 
   private def d8(s: SparkSession, dir: String): DataFrame = {
-    val nm = kmeansAssign(s, dir)
+    val nm = CoarseArtifacts(s, dir).assign
       .withColumn("norm", sqrt(col("vv")))
       .select(col("cluster"), col("vec_id"), col("v"), col("norm"))
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(d8SampleCap)
       // three consumers (sample stamp + both pair sides) — persist so
-      // the 2-round Lloyd pipeline runs once; eager count ends the
-      // parallel cache-fill race (see jaccardPairsLeased)
+      // the md5-rank sample runs once; eager count ends the parallel
+      // cache-fill race (see TextDedup.jaccardPairs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     nm.count()
     val meta = nm.agg(count(lit(1)).as("n_sampled"))
@@ -537,11 +542,9 @@ object SimilarityQueries extends QueryPack {
     * (d8's guard, two-sided), and stays shuffle_hash (an index never
     * broadcasts). */
   private def d12(s: SparkSession, dir: String): DataFrame = {
-    val nm = kmeansAssign(s, dir)
+    val nm = CoarseArtifacts(s, dir).assign
       .withColumn("norm", sqrt(col("vv")))
       .select(col("cluster"), col("vec_id"), col("v"), col("norm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    nm.count()
     val delta = nm.filter(col("vec_id") % 10 === 4)
     val index = nm.filter(col("vec_id") % 10 =!= 4)
     val w = Window.partitionBy(col("vec_id")).orderBy(col("keeper"))
@@ -669,7 +672,7 @@ object SimilarityQueries extends QueryPack {
     val perCell = 5
     val w = Window.partitionBy(col("cluster"))
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-    kmeansAssign(s, dir)
+    CoarseArtifacts(s, dir).assign
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= perCell)
       .select(col("cluster").cast("long").as("cluster"),
@@ -720,38 +723,29 @@ object SimilarityQueries extends QueryPack {
       |GROUP BY ex.qid
       |ORDER BY ex.qid""".stripMargin
 
-  /** Shared PQ artifacts (coarse cells, per-subspace codes +
-    * codebooks, decoded reconstructions) for s10/s11/s12 — in
-    * production the codebooks and the encoded corpus are TRAINED
-    * ONCE and persisted as index artifacts that every search and
-    * audit then reads; the registry mirrors that lifecycle instead
-    * of re-running the Lloyd chains per query. Keyed by (session,
-    * dir); frames are cached through the registry's `persist`. */
+  /** Shared PQ artifacts (per-subspace codes + codebooks, decoded
+    * reconstructions) for s10's encoding and the IVF-PQ legs
+    * ([[ivfpqScored]], s29) — in production the codebooks and the
+    * encoded corpus are TRAINED ONCE and persisted as index artifacts
+    * that every search and audit then reads; the registry mirrors that
+    * lifecycle instead of re-running the Lloyd chains per query. Keyed
+    * by (session, dir); frames are cached through the registry's
+    * `persist`. */
   private object PqArtifacts {
-    final case class Arts(cells: DataFrame, cents: DataFrame,
-        subs: Seq[(DataFrame, DataFrame)], recon: DataFrame)
+    final case class Arts(subs: Seq[(DataFrame, DataFrame)], recon: DataFrame)
     private val reg = new graft.ArtifactRegistry[Arts]()
 
-    def apply(s: SparkSession, dir: String): Arts =
-      reg(s, dir)(build(s, dir, _))
-
-    private def build(s: SparkSession, dir: String,
-        b: graft.ArtifactRegistry.Build): Arts = {
-      val base = evec(s, dir)
-      // coarse quantizer: centroids AND assignments both persist (the
-      // multi-probe sweep ranks cells by centroid distance per query)
-      val coarse0 = base.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("v").as("cv"), col("vv").as("cc"))
-      val cents = b.persist(centroidUpdate(assign(base, coarse0)))
-      val cells = b.persist(assign(base, cents)
-        .select(col("vec_id"), col("cluster").as("cell")))
+    def apply(s: SparkSession, dir: String): Arts = reg(s, dir) { b =>
+      // the scan, not the cached coarse assignment: a frame over a cache
+      // keeps the cached frame's lineage, and nesting the coarse Lloyd
+      // chain into all eight code/codebook plans measured s10-s30
+      // 1.3-2x slower warm (driver-side analysis of the larger plans)
+      val base = emb(s, dir)
       val subs = (0 until 4).map { j =>
         val e = base
           .select(col("vec_id"), slice(col("v"), j * 16 + 1, 16).as("v"))
           .withColumn("vv", dot(col("v"), col("v")))
-        val c0 = e.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("cid"), col("v").as("cv"), col("vv").as("cc"))
-        val cb = centroidUpdate(assign(e, c0))
+        val cb = lloydCents(e)
         val codes = b.persist(assign(e, cb)
           .select(col("vec_id"), col("cluster").as(s"cl$j"),
             col("d2").as(s"d$j")))
@@ -766,7 +760,7 @@ object SimilarityQueries extends QueryPack {
         .select(col("vec_id"),
           concat(col("cv0"), col("cv1"), col("cv2"), col("cv3")).as("r"))
         .withColumn("rr", dot(col("r"), col("r"))))
-      Arts(cells, cents, subs, recon)
+      Arts(subs, recon)
     }
   }
 
@@ -865,6 +859,40 @@ object SimilarityQueries extends QueryPack {
       |JOIN a23 ON a20.vec_id = a23.vec_id
       |ORDER BY a20.vec_id""".stripMargin
 
+  /** The IVF-PQ serving leg s11, s12, s24, s26 and s30 share: the
+    * 10-query sample (vec_id < 10) with its coarse cell and the refine
+    * bound `rUsed` (an expression that may read the cell occupancy
+    * `occ`), localized — k rows that every downstream leg reads — and
+    * scored against every other member of its own cell as `(qid,
+    * r_used, cid_, adc, exact)`: adc is the squared L2 distance to the
+    * candidate's PQ reconstruction (asymmetric distance computation —
+    * the query stays exact), exact the one to its raw vector.
+    *
+    * Scale: candidates are cell-restricted (s2's Σ cell²/k bound,
+    * never query × corpus) and the k-row occupancy aggregate
+    * broadcasts. The occupancy join is a LEFT join on its unique key,
+    * so the optimizer drops it (no aggregate, no broadcast job) when
+    * `rUsed` does not read `occ`; every query's cell holds the query
+    * itself, so it never yields a null. */
+  private def ivfpqScored(s: SparkSession, dir: String,
+      rUsed: Column = lit(s26RFloor)): DataFrame = {
+    val cells = CoarseArtifacts(s, dir).assign
+    val occ = cells.groupBy(col("cluster")).agg(count(lit(1)).as("occ"))
+    val qs = graft.QueryPack.localize(cells.filter(col("vec_id") < 10)
+      .join(broadcast(occ), Seq("cluster"), "left")
+      .select(col("vec_id").as("qid"), col("v").as("qv"), col("vv").as("qq"),
+        col("cluster").as("cell"), rUsed.as("r_used")))
+    val cands = PqArtifacts(s, dir).recon.join(cells, "vec_id")
+      .select(col("vec_id").as("cid_"), col("cluster").as("cell"), col("r"),
+        col("rr"), col("v").as("xv"), col("vv").as("xx"))
+    qs.join(cands, "cell").filter(col("qid") =!= col("cid_"))
+      .select(col("qid"), col("r_used"), col("cid_"),
+        (col("qq") - lit(2.0) * dot(col("qv"), col("r")) + col("rr"))
+          .as("adc"),
+        (col("qq") - lit(2.0) * dot(col("qv"), col("xv")) + col("xx"))
+          .as("exact"))
+  }
+
   /** s11 — IVF-PQ ANN (the production serving shape for web-scale
     * vector search, composing s2's coarse quantizer with s10's PQ
     * codebooks): queries search only their own IVF cell, and
@@ -883,19 +911,9 @@ object SimilarityQueries extends QueryPack {
   private def s11(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.udaf
     val topk = udaf(new graft.functions.TopKAgg(3))
-    val base = evec(s, dir)
-    val arts = PqArtifacts(s, dir)
-    val (cells, recon) = (arts.cells, arts.recon)
-    val cands = recon.join(cells, "vec_id")
-      .select(col("vec_id").as("cid_"), col("cell"), col("r"), col("rr"))
-    val qs = base.filter(col("vec_id") < 10).join(cells, "vec_id")
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("vv").as("qq"), col("cell"))
-    qs.join(cands, "cell").filter(col("qid") =!= col("cid_"))
-      .withColumn("dist",
-        col("qq") - lit(2.0) * dot(col("qv"), col("r")) + col("rr"))
+    ivfpqScored(s, dir)
       .groupBy(col("qid"))
-      .agg(topk(-col("dist"), col("cid_")).as("top"))
+      .agg(topk(-col("adc"), col("cid_")).as("top"))
       .select(col("qid"), posexplode(col("top")).as(Seq("pos", "sc")))
       .select(col("qid"), (col("pos") + 1).cast("long").as("rk"),
         col("sc.id").as("cand_id"), fround(-col("sc.score"), 6).as("adc_dist"))
@@ -950,23 +968,10 @@ object SimilarityQueries extends QueryPack {
     * engines. Top-1s are min(struct(dist, id)) — partial+final, no
     * window. */
   private def s12(s: SparkSession, dir: String): DataFrame = {
-    val base = evec(s, dir)
-    val arts = PqArtifacts(s, dir)
-    val (cells, recon) = (arts.cells, arts.recon)
-    val cands = recon.join(cells, "vec_id").join(base, "vec_id")
-      .select(col("vec_id").as("cid_"), col("cell"), col("r"), col("rr"),
-        col("v").as("xv"), col("vv").as("xx"))
-    val qs = base.filter(col("vec_id") < 10).join(cells, "vec_id")
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("vv").as("qq"), col("cell"))
-    val scored = qs.join(cands, "cell").filter(col("qid") =!= col("cid_"))
-      .select(col("qid"), col("cid_"),
-        (col("qq") - lit(2.0) * dot(col("qv"), col("r")) + col("rr")).as("adc"),
-        (col("qq") - lit(2.0) * dot(col("qv"), col("xv")) + col("xx")).as("exact"))
     val sortedErrFold = expr(
       "aggregate(transform(array_sort(collect_list(struct(cid_, e))), " +
         "x -> x.e), cast(0.0 AS double), (acc, x) -> acc + x)")
-    scored
+    ivfpqScored(s, dir)
       .withColumn("e", abs(col("adc") - col("exact")))
       .groupBy(col("qid"))
       .agg(count(lit(1)).as("n_cands"),
@@ -1036,54 +1041,49 @@ object SimilarityQueries extends QueryPack {
     * sized (ranks) and R-sized (refine) frames. At 100 TB the raw
     * fetch is R random reads per query against the vec_id-bucketed
     * vector store — the refine stage's entire cost, which is why R
-    * is a knob and this audit exists.
+    * is a knob and this audit exists. */
+  private def s24(s: SparkSession, dir: String): DataFrame =
+    refineAudit(s, dir, lit(s26RFloor)).drop("r_used").orderBy(col("qid"))
+
+  /** The refine audit s24 (pinned R) and s26 (occupancy-derived R)
+    * share, over [[ivfpqScored]] with shortlist bound `rUsed`: per
+    * query, recall@3 of the raw ADC ranking and of the refined
+    * ranking (the ≤ r_used best-ADC candidates re-ranked exactly)
+    * against the exact cell-restricted top-3, and the lift.
     *
     * r18: same math, one pass. The query sample is localized
     * (QueryPack.localize), and the refined leg folds into the main
     * windowed frame: within the (exact, cid_) order, a shortlisted
     * row's re-rank among shortlisted rows IS the running count of
     * shortlisted rows up to it, so `ref_rk` = that running sum and the
-    * whole second scored-subtree + join-back disappears. */
-  private def s24(s: SparkSession, dir: String): DataFrame = {
-    import graft.QueryPack.localize
-    val shortR = 10
-    val base = evec(s, dir)
-    val arts = PqArtifacts(s, dir)
-    val cands = arts.recon.join(arts.cells, "vec_id").join(base, "vec_id")
-      .select(col("vec_id").as("cid_"), col("cell"), col("r"), col("rr"),
-        col("v").as("xv"), col("vv").as("xx"))
-    val qs = localize(base.filter(col("vec_id") < 10).join(arts.cells, "vec_id")
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("vv").as("qq"), col("cell")))
-    val scored = qs.join(cands, "cell").filter(col("qid") =!= col("cid_"))
-      .select(col("qid"), col("cid_"),
-        (col("qq") - lit(2.0) * dot(col("qv"), col("r")) + col("rr"))
-          .as("adc"),
-        (col("qq") - lit(2.0) * dot(col("qv"), col("xv")) + col("xx"))
-          .as("exact"))
+    * whole second scored-subtree + join-back disappears. The bound
+    * `r_used` is a per-qid column, constant within every window
+    * partition. */
+  private def refineAudit(s: SparkSession, dir: String,
+      rUsed: Column): DataFrame = {
     val wAdc = Window.partitionBy(col("qid")).orderBy(col("adc"), col("cid_"))
     val wEx = Window.partitionBy(col("qid")).orderBy(col("exact"), col("cid_"))
     val wExRun = wEx.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = scored
+    val ranked = ivfpqScored(s, dir, rUsed)
       .withColumn("adc_rk", row_number().over(wAdc))
       .withColumn("true_rk", row_number().over(wEx))
       .withColumn("ref_cum",
-        sum(when(col("adc_rk") <= shortR, 1L).otherwise(0L)).over(wExRun))
-    ranked.groupBy(col("qid"))
+        sum(when(col("adc_rk") <= col("r_used"), 1L).otherwise(0L))
+          .over(wExRun))
+    ranked.groupBy(col("qid"), col("r_used"))
       .agg(count(lit(1)).as("n_cands"),
         sum(when(col("adc_rk") <= 3 && col("true_rk") <= 3, 1L)
           .otherwise(0L)).as("n_adc_hit"),
-        sum(when(col("adc_rk") <= shortR && col("ref_cum") <= 3 &&
+        sum(when(col("adc_rk") <= col("r_used") && col("ref_cum") <= 3 &&
           col("true_rk") <= 3, 1L).otherwise(0L)).as("n_ref_hit"))
       .withColumn("k", least(lit(3L), col("n_cands")))
-      .select(col("qid"), col("n_cands"),
+      .select(col("qid"), col("n_cands"), col("r_used"),
         fround(col("n_adc_hit").cast("double") / col("k"), 6)
           .as("recall_adc"),
         fround(col("n_ref_hit").cast("double") / col("k"), 6)
           .as("recall_refined"),
         fround((col("n_ref_hit") - col("n_adc_hit")).cast("double")
           / col("k"), 6).as("lift"))
-      .orderBy(col("qid"))
   }
 
   private val s24Sql = kmeansSql + ",\n" +
@@ -1164,9 +1164,8 @@ object SimilarityQueries extends QueryPack {
     * fresh 50k-row `dists` persist per invocation for the session). */
   private def s13(s: SparkSession, dir: String): DataFrame = {
     import graft.QueryPack.localize
-    val base = evec(s, dir)
-    val arts = PqArtifacts(s, dir)
-    val qs = localize(base.filter(col("vec_id") < 10)
+    val coarse = CoarseArtifacts(s, dir)
+    val qs = localize(coarse.assign.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("vv").as("qq")))
     val wCell = Window.partitionBy(col("qid")).orderBy(col("cd2"), col("cid"))
     // BOUNDED localize (r19): only ranks <= the max probe level (4)
@@ -1176,15 +1175,15 @@ object SimilarityQueries extends QueryPack {
     // grows with n under the r17 IVF cell-count adaptation). Same
     // rows reach every consumer; the filter just moves ahead of the
     // driver hop (r18 verdict item 4).
-    val ranked0 = qs.crossJoin(broadcast(arts.cents))
+    val ranked0 = qs.crossJoin(broadcast(coarse.cents))
       .withColumn("cd2",
         col("qq") - lit(2.0) * dot(col("qv"), col("cv")) + col("cc"))
       .withColumn("crk", row_number().over(wCell))
     val cellRank = localize(ranked0.filter(col("crk") <= 4)
       .select(col("qid"), col("cid"), col("crk")))
-    val corpus = base.join(arts.cells, "vec_id")
+    val corpus = coarse.assign
       .select(col("vec_id").as("nid"), col("v").as("nv"),
-        col("vv").as("nn"), col("cell"))
+        col("vv").as("nn"), col("cluster").as("cell"))
     val dists = qs.join(corpus, col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), col("cell"),
         (col("qq") - lit(2.0) * dot(col("qv"), col("nv")) + col("nn")).as("d2"))
@@ -1271,7 +1270,7 @@ object SimilarityQueries extends QueryPack {
     * math; the brute audit join is the AUDIT shape (runs on a query
     * sample at 100 TB — serving goes through IVF, s2/s11). */
   private def s14(s: SparkSession, dir: String): DataFrame = {
-    val base = evec(s, dir)
+    val base = emb(s, dir)
     val dims = base
       .select(posexplode(col("v")).as(Seq("pos", "x")))
       .groupBy(col("pos"))
@@ -2436,6 +2435,10 @@ object SimilarityQueries extends QueryPack {
   private[queries] val s26RFloor = 10L
   private[queries] val s26CellDivisor = 20L
 
+  /** s26's shortlist bound over the query cell's occupancy `occ`. */
+  private def occBound: Column = greatest(lit(s26RFloor),
+    expr(s"(occ + ${s26CellDivisor - 1}) div $s26CellDivisor"))
+
   /** s26 — OCCUPANCY-ADAPTIVE PQ refine (round 16, closing the one
     * measured degradation of round 15): s24's refine re-rank with the
     * shortlist R derived per query from the serving index's cell
@@ -2454,59 +2457,9 @@ object SimilarityQueries extends QueryPack {
     * per-query windows over cell-sized frames) plus one k-row
     * occupancy aggregate that broadcasts; the refine cost is R
     * raw-vector fetches per query and now scales as occ/20, which is
-    * the POINT — a fixed R is the knob that rots as the index grows.
-    *
-    * r18: s24's one-pass shape with the per-query
-    * occupancy-derived `r_used` shortlist bound (see s24 for the
-    * running-count ref_rk argument; here the bound is a per-qid
-    * column, constant within every window partition). */
-  private def s26(s: SparkSession, dir: String): DataFrame = {
-    import graft.QueryPack.localize
-    val base = evec(s, dir)
-    val arts = PqArtifacts(s, dir)
-    val occ = arts.cells.groupBy(col("cell")).agg(count(lit(1)).as("occ"))
-    val cands = arts.recon.join(arts.cells, "vec_id").join(base, "vec_id")
-      .select(col("vec_id").as("cid_"), col("cell"), col("r"), col("rr"),
-        col("v").as("xv"), col("vv").as("xx"))
-    val qs = localize(base.filter(col("vec_id") < 10)
-      .join(arts.cells, "vec_id")
-      .join(broadcast(occ), Seq("cell"))
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("vv").as("qq"), col("cell"),
-        greatest(lit(s26RFloor),
-          expr(s"(occ + ${s26CellDivisor - 1}) div $s26CellDivisor"))
-          .as("r_used")))
-    val scored = qs.join(cands, "cell").filter(col("qid") =!= col("cid_"))
-      .select(col("qid"), col("r_used"), col("cid_"),
-        (col("qq") - lit(2.0) * dot(col("qv"), col("r")) + col("rr"))
-          .as("adc"),
-        (col("qq") - lit(2.0) * dot(col("qv"), col("xv")) + col("xx"))
-          .as("exact"))
-    val wAdc = Window.partitionBy(col("qid")).orderBy(col("adc"), col("cid_"))
-    val wEx = Window.partitionBy(col("qid")).orderBy(col("exact"), col("cid_"))
-    val wExRun = wEx.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = scored
-      .withColumn("adc_rk", row_number().over(wAdc))
-      .withColumn("true_rk", row_number().over(wEx))
-      .withColumn("ref_cum",
-        sum(when(col("adc_rk") <= col("r_used"), 1L).otherwise(0L))
-          .over(wExRun))
-    ranked.groupBy(col("qid"), col("r_used"))
-      .agg(count(lit(1)).as("n_cands"),
-        sum(when(col("adc_rk") <= 3 && col("true_rk") <= 3, 1L)
-          .otherwise(0L)).as("n_adc_hit"),
-        sum(when(col("adc_rk") <= col("r_used") && col("ref_cum") <= 3 &&
-          col("true_rk") <= 3, 1L).otherwise(0L)).as("n_ref_hit"))
-      .withColumn("k", least(lit(3L), col("n_cands")))
-      .select(col("qid"), col("n_cands"), col("r_used"),
-        fround(col("n_adc_hit").cast("double") / col("k"), 6)
-          .as("recall_adc"),
-        fround(col("n_ref_hit").cast("double") / col("k"), 6)
-          .as("recall_refined"),
-        fround((col("n_ref_hit") - col("n_adc_hit")).cast("double")
-          / col("k"), 6).as("lift"))
-      .orderBy(col("qid"))
-  }
+    * the POINT — a fixed R is the knob that rots as the index grows. */
+  private def s26(s: SparkSession, dir: String): DataFrame =
+    refineAudit(s, dir, occBound).orderBy(col("qid"))
 
   private val s26Sql = kmeansSql + ",\n" +
     "eall AS (SELECT vec_id, v FROM e),\n" +
@@ -2690,10 +2643,10 @@ object SimilarityQueries extends QueryPack {
         graft.etl.DurableArtifacts.drop(s, splitCentsTableName(dir)))
 
     def apply(s: SparkSession, dir: String): Art = reg(s, dir) { b =>
-      val arts = PqArtifacts(s, dir)
-      val base = evec(s, dir)
-      val occ = arts.cells.groupBy(col("cell")).agg(count(lit(1)).as("occ"))
-      val proj = base.join(arts.cells, "vec_id")
+      val cells = CoarseArtifacts(s, dir).assign
+        .withColumnRenamed("cluster", "cell")
+      val occ = cells.groupBy(col("cell")).agg(count(lit(1)).as("occ"))
+      val proj = cells
         .withColumn("proj", fround(dot(col("v"), typedLit(splitAxis)), 6))
         .select(col("vec_id"), col("cell"), col("proj"))
       // global rank within cell WITHOUT a per-cell window funnel:
@@ -2709,7 +2662,7 @@ object SimilarityQueries extends QueryPack {
           expr(s"(occ + ${s29TargetOcc - 1}) div $s29TargetOcc"))
         .withColumn("sub", expr("((rk - 1) * nsplit) div occ"))
         .select(col("vec_id"), col("cell"), col("sub")))
-      val subCents = subs.join(base, "vec_id")
+      val subCents = subs.join(cells.select(col("vec_id"), col("v")), "vec_id")
         .select(col("cell"), col("sub"),
           posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy(col("cell"), col("sub"), col("pos"))
@@ -2726,7 +2679,8 @@ object SimilarityQueries extends QueryPack {
       // probed scoring + full-cell truth both read the candidates
       // (the diamond rule; row width matches the cached recon)
       val cands = b.persist(
-        arts.recon.join(subs, "vec_id").join(base, "vec_id")
+        PqArtifacts(s, dir).recon.join(subs, "vec_id")
+          .join(cells.select(col("vec_id"), col("v"), col("vv")), "vec_id")
           .select(col("vec_id").as("cid_"), col("cell"), col("sub"),
             col("r"), col("rr"), col("v").as("xv"), col("vv").as("xx")))
       Art(subs, cands)
@@ -2796,15 +2750,13 @@ object SimilarityQueries extends QueryPack {
     * measured flat-to-worse still holds — the win comes from
     * restructuring the legs to be independent first.) */
   private def s29(s: SparkSession, dir: String): DataFrame = {
-    val base = evec(s, dir)
     val split = SplitArtifacts(s, dir)
     val subs = split.subs
     val cands = split.cands
     val pub = s.table(splitCentsTableName(dir))
-    val q0Src = base.filter(col("vec_id") < 10)
-      .join(subs.select(col("vec_id"), col("cell")), "vec_id")
+    val q0Src = CoarseArtifacts(s, dir).assign.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("vv").as("qq"), col("cell"))
+        col("vv").as("qq"), col("cluster").as("cell"))
     val q0Rows = q0Src.collect()
     val q0 = s.createDataFrame(
       java.util.Arrays.asList(q0Rows.toIndexedSeq: _*), q0Src.schema)
@@ -3230,32 +3182,13 @@ object SimilarityQueries extends QueryPack {
   private def s30(s: SparkSession, dir: String): DataFrame = {
     val L = 20
     val sparse = bm25Top(s, dir, L)
-    val base = evec(s, dir)
-    val arts = PqArtifacts(s, dir)
-    val occ = arts.cells.groupBy(col("cell")).agg(count(lit(1)).as("occ"))
-    val cands = arts.recon.join(arts.cells, "vec_id").join(base, "vec_id")
-      .select(col("vec_id").as("cid_"), col("cell"), col("r"), col("rr"),
-        col("v").as("xv"), col("vv").as("xx"))
-    val qs = graft.QueryPack.localize(
-      base.filter(col("vec_id") < 10).join(arts.cells, "vec_id")
-        .join(broadcast(occ), Seq("cell"))
-        .select(col("vec_id").as("qid"), col("v").as("qv"),
-          col("vv").as("qq"), col("cell"),
-          greatest(lit(s26RFloor),
-            expr(s"(occ + ${s26CellDivisor - 1}) div $s26CellDivisor"))
-            .as("r_used")))
     val wAdc = Window.partitionBy(col("qid")).orderBy(col("adc"), col("cid_"))
-    val ranked = qs.join(cands, "cell").filter(col("qid") =!= col("cid_"))
-      .select(col("qid"), col("r_used"), col("cid_"),
-        (col("qq") - lit(2.0) * dot(col("qv"), col("r")) + col("rr"))
-          .as("adc"),
-        (col("qq") - lit(2.0) * dot(col("qv"), col("xv")) + col("xx"))
-          .as("exact"))
+    val ranked = ivfpqScored(s, dir, occBound)
       .withColumn("adc_rk", row_number().over(wAdc))
       // all three refine legs read this frame
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     ranked.count()
-    def denseList(cap: org.apache.spark.sql.Column): DataFrame = ranked
+    def denseList(cap: Column): DataFrame = ranked
       .filter(col("adc_rk") <= cap)
       .withColumn("drk", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("exact"), col("cid_"))))

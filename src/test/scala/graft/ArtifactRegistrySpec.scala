@@ -152,6 +152,19 @@ class ArtifactRegistrySpec extends SparkSpec {
     b2.storageLevel shouldBe StorageLevel.NONE
   }
 
+  // a query that caches only through the registry leaves nothing
+  // behind once its corpus is released
+  Seq("s6_kmeans", "s8_balanced_sample", "d12_incr_semdedup",
+      "d2_ngram_jaccard").foreach { q =>
+    test(s"release frees every cache $q made") {
+      val dir = s"${sys.props("user.home")}/testdata/sf0.001"
+      val before = sc.getPersistentRDDs.keySet
+      SparkEntry.queries(q)(spark, dir).collect()
+      ArtifactRegistry.release(spark, dir)
+      (sc.getPersistentRDDs.keySet -- before) shouldBe empty
+    }
+  }
+
   test("e31's day-partitioned serving directory is deleted by release") {
     val dir = s"${sys.props("user.home")}/testdata/sf0.001"
     val root = new java.io.File(sys.props("java.io.tmpdir"),

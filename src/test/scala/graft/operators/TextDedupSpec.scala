@@ -27,7 +27,7 @@ class TextDedupSpec extends SparkSpec {
       .toDF("id", "xs")
 
     val out = TextDedup.jaccardPairs(docs, "id", "xs", threshold = 0.5, maxDf = 4)
-      .collect()
+      .df.collect()
     out.map(r => (r.getString(0), r.getString(1))).toSet shouldBe Set(("a", "b"))
     // jaccard over FULL sets incl. boilerplate: 12 common / 14 union
     out.head.getDouble(2) shouldBe (12.0 / 14.0) +- 1e-6
@@ -37,8 +37,8 @@ class TextDedupSpec extends SparkSpec {
     val docs = (1 to 6).map(i => (s"d$i", Seq(1000L + i) ++ boiler)).toDF("id", "xs")
     // uncapped: every pair shares the 3 boilerplate shingles (jaccard
     // 3/5 = 0.6); capped at df>4 those links vanish entirely.
-    TextDedup.jaccardPairs(docs, "id", "xs", 0.5).count() shouldBe 15
-    TextDedup.jaccardPairs(docs, "id", "xs", 0.5, maxDf = 4).count() shouldBe 0
+    TextDedup.jaccardPairs(docs, "id", "xs", 0.5).df.count() shouldBe 15
+    TextDedup.jaccardPairs(docs, "id", "xs", 0.5, maxDf = 4).df.count() shouldBe 0
   }
 
   test("simhash dense-bucket guard matches brute force on a skewed corpus") {
@@ -52,7 +52,7 @@ class TextDedupSpec extends SparkSpec {
       .toDF("id", "simhash")
 
     val got = TextDedup.simhashPairs(docs, "id", maxHamming = 3, nBlocks = 4)
-      .select("d1", "d2", "hamming").as[(Long, Long, Long)].collect().toSet
+      .df.select("d1", "d2", "hamming").as[(Long, Long, Long)].collect().toSet
 
     val brute = docs.as("a").crossJoin(docs.as("b"))
       .filter(col("a.id") < col("b.id"))
@@ -83,7 +83,7 @@ class TextDedupSpec extends SparkSpec {
 
     val got = TextDedup.simhashPairs(docs, "id", maxHamming = 3, nBlocks = 4,
         splitThreshold = 2)
-      .select("d1", "d2", "hamming").as[(Long, Long, Long)].collect().toSet
+      .df.select("d1", "d2", "hamming").as[(Long, Long, Long)].collect().toSet
     val brute = docs.as("a").crossJoin(docs.as("b"))
       .filter(col("a.id") < col("b.id"))
       .select(col("a.id"), col("b.id"),
@@ -98,7 +98,7 @@ class TextDedupSpec extends SparkSpec {
   test("leased form frees the intermediate cache on release") {
     val docs = (Seq(("a", Seq(1L, 2L, 3L)), ("b", Seq(1L, 2L, 4L)),
       ("c", Seq(9L, 10L, 11L)))).toDF("id", "xs")
-    val lease = TextDedup.jaccardPairsLeased(docs, "id", "xs", threshold = 0.4)
+    val lease = TextDedup.jaccardPairs(docs, "id", "xs", threshold = 0.4)
     lease.df.count() shouldBe 1 // consume the result
     lease.cached should not be empty
     all(lease.cached.map(_.storageLevel.useMemory)) shouldBe true
@@ -109,7 +109,7 @@ class TextDedupSpec extends SparkSpec {
     lease.df.count() shouldBe 1
 
     val sims = Seq((1L, 0x0FL), (2L, 0x0FL), (3L, 0xF0L)).toDF("id", "simhash")
-    val sl = TextDedup.simhashPairsLeased(sims, "id", maxHamming = 3)
+    val sl = TextDedup.simhashPairs(sims, "id", maxHamming = 3)
     sl.df.count() shouldBe 1
     sl.release()
     all(sl.cached.map(_.storageLevel)) shouldBe
