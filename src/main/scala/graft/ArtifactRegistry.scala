@@ -28,7 +28,8 @@ import org.apache.spark.storage.StorageLevel
   * Build contract: the registry owns every frame a build caches. A
   * build receives an [[ArtifactRegistry.Build]] handle and caches
   * through `persist(df)` only (MEMORY_AND_DISK, then an eager
-  * `count()` so parallel stages never race the cache fill); the cell
+  * `count()` so parallel stages never race the cache fill;
+  * `persistCounted(df)` also hands that count back); the cell
   * records each such frame. If the build throws, the cell unpersists
   * everything it recorded and rethrows, so a retry starts clean.
   * Retiring the cell (release or eviction) unpersists the recorded
@@ -155,11 +156,14 @@ object ArtifactRegistry {
 
     /** Persist `df` MEMORY_AND_DISK, record it in this build's cell,
       * then materialize it with `count()`; returns the cached frame. */
-    def persist(df: DataFrame): DataFrame = {
+    def persist(df: DataFrame): DataFrame = persistCounted(df)._1
+
+    /** [[persist]], also returning the row count that materialized
+      * the frame, so a caller that needs it runs no second count. */
+    def persistCounted(df: DataFrame): (DataFrame, Long) = {
       val p = df.persist(StorageLevel.MEMORY_AND_DISK)
       synchronized { persisted ::= p }
-      p.count()
-      p
+      (p, p.count())
     }
   }
 

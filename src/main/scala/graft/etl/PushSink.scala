@@ -1,6 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** K1/K2 — the push-dataset row sink contract (reference
   * `src/services/post-factevent.service.ts`,
@@ -82,14 +84,22 @@ object PushSink {
       pacer: Pacer = SystemPacer): Long = {
     import org.apache.spark.sql.functions._
     val sink = toSinkColumns(facts)
+    val spark = facts.sparkSession
     val parts = numPartitions.getOrElse(
-      math.max(1, facts.sparkSession.sparkContext.defaultParallelism))
+      math.max(1, spark.sparkContext.defaultParallelism))
+    // the executed plan's own rows: `toRdd` adds no Row conversion and
+    // no `mapPartitions` of Dataset/RDD, whose closures Spark's
+    // ClosureCleaner cleans by parsing those classes on every batch
     val rows = sink.select(to_json(struct(sink.columns.map(col): _*)).as("j"))
-      .rdd.map(_.getString(0))
-    // repartitioned on the RDD: with AQE, `.rdd` has already run the
-    // plan's shuffle stages, which a second Dataset would run again
-    val pushed = if (rows.getNumPartitions > parts) rows.repartition(parts) else rows
-    val counts = pushed.mapPartitions { it =>
+      .queryExecution.toRdd
+    // repartitioned on the RDD: with AQE, `toRdd` has already run the
+    // plan's shuffle stages, which a second Dataset would run again.
+    // The plan reuses its InternalRow objects, so copy before the
+    // shuffle buffers them.
+    val pushed =
+      if (rows.getNumPartitions > parts) rows.map(_.copy()).repartition(parts)
+      else rows
+    val pushPartition = (_: TaskContext, it: Iterator[InternalRow]) => {
       // token bucket state, one per partition-task
       var tokens = rateLimit.map(_.burst.toDouble).getOrElse(0.0)
       var lastRefill = pacer.nowNanos
@@ -125,11 +135,15 @@ object PushSink {
         }
       }
       var n = 0L
-      it.grouped(chunkSize).foreach { chunk =>
+      it.map(_.getUTF8String(0).toString).grouped(chunkSize).foreach { chunk =>
         pushWithRetry(chunk.toSeq); n += chunk.size
       }
-      Iterator.single(n)
+      n
     }
-    counts.collect().sum
+    // one job, one closure to clean, per push
+    var total = 0L
+    spark.sparkContext.runJob(pushed, pushPartition,
+      0 until pushed.getNumPartitions, (_: Int, n: Long) => total += n)
+    total
   }
 }

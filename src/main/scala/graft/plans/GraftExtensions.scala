@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{AHash, BloomMightContain, CountIn, DotProduct, LevBound, MinHashSig, NormText, PackedCommonCount, PackedIntersect, PackSortedLongs, PairMerge, SafeDateKey, ShingleHash, ShingleSeq, SigMatches, WinnowMin}
+import graft.functions.{AHash, BloomMightContain, CountIn, DotProduct, HeaderCI, LevBound, MinHashSig, NormText, PackedCommonCount, PackedIntersect, PackSortedLongs, PairMerge, SafeDateKey, ShingleHash, ShingleSeq, SigMatches, WinnowMin}
 
 /** Session extension wiring for graft's native expressions and the
   * as-of join planner strategy. Sessions get them when they are built:
@@ -27,6 +27,9 @@ object GraftExtensions {
     (new FunctionIdentifier("graft_date_key"),
       new ExpressionInfo(classOf[SafeDateKey].getName, "graft_date_key"),
       (args: Seq[Expression]) => SafeDateKey(args(0), args(1))),
+    (new FunctionIdentifier("graft_header_ci"),
+      new ExpressionInfo(classOf[HeaderCI].getName, "graft_header_ci"),
+      (args: Seq[Expression]) => HeaderCI(args(0), args(1))),
     (new FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
       (args: Seq[Expression]) => DotProduct(args(0), args(1))),

@@ -138,10 +138,9 @@ object GraphQueries extends QueryPack {
           .select((col("ck") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
           .unionAll(pairs.select((col("sk") * 2 + 1).as("src"),
             (col("ck") * 2).as("dst"))))
-      val deg = b.persist(
+      val (deg, nNodes) = b.persistCounted(
         edges.groupBy(col("src")).agg(count(lit(1)).as("deg")))
       val edgesDeg = b.persist(edges.join(deg, "src"))
-      val nNodes = deg.count() // cached — one cheap job
       // dst-keyed serving copy for the g1/g3 broadcast-rank rounds:
       // bucketed AND sorted on (dst, src) with deg(src) attached, so
       // a round is scan ⋈ broadcast(ranks) → ordered-window fold →
@@ -285,9 +284,9 @@ object GraphQueries extends QueryPack {
           .unionAll(pairs.select((col("sk") * 2 + 1).as("src"),
             (col("ck") * 2).as("dst")))
       }
-      val deg = b.persist(
+      val (deg, nNodes) = b.persistCounted(
         edges.groupBy(col("src")).agg(count(lit(1)).as("deg")))
-      Arts(edges, deg, deg.count())
+      Arts(edges, deg, nNodes)
     }
   }
 

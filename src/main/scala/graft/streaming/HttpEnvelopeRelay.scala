@@ -33,8 +33,9 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale: the relay is a stateless edge process — run N of them
   * behind any balancer, all writing the same spool (names are
-  * UUID-unique); ingest reads the spool with Spark's file source
-  * (maxFilesPerTrigger bounds a micro-batch). The engine's contract
+  * UUID-unique); ingest reads the spool with Spark's file source,
+  * and each micro-batch takes every spool file that landed since the
+  * last one (no maxFilesPerTrigger is set). The engine's contract
   * stays the envelope frame, exactly as with the file/socket/Kafka
   * transports in [[StreamingIngest]].
   */
@@ -69,14 +70,13 @@ object HttpEnvelopeRelay {
   }
 
   /** The spool as a streaming envelope frame (`source, headers, body,
-    * receivedAt`) — plug into [[StreamingIngest.transform]]. */
+    * receivedAt`) — plug into [[StreamingIngest.transform]]. Spark's
+    * JSON file source reads each envelope line straight into
+    * [[EnvelopeSchema]]: one parse per delivery, in the scan. */
   def spoolSource(spark: SparkSession, spoolDir: String): DataFrame =
-    spark.readStream.schema("value STRING").text(spoolDir)
-      .select(from_json(col("value"), EnvelopeSchema).as("e"))
-      .select(col("e.source").as("source"),
-        col("e.headers").as("headers"),
-        col("e.body").as("body"),
-        timestamp_micros(col("e.receivedAtMicros")).as("receivedAt"))
+    spark.readStream.schema(EnvelopeSchema).json(spoolDir)
+      .select(col("source"), col("headers"), col("body"),
+        timestamp_micros(col("receivedAtMicros")).as("receivedAt"))
 
   private def respond(ex: HttpExchange, status: Int, json: String): Unit = {
     val bytes = json.getBytes(StandardCharsets.UTF_8)

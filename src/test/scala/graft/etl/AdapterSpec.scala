@@ -3,8 +3,10 @@ package graft.etl
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, JsonToStructs}
+import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.functions.{col, upper}
+import org.apache.spark.sql.functions.{col, timestamp_micros, upper}
 
 import graft.SparkSpec
 
@@ -199,5 +201,50 @@ class AdapterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     routed.columns.toSeq shouldBe perSource.columns.toSeq
 
     collectLeaves(routed.queryExecution.executedPlan) should have size 1
+  }
+
+  test("the ingest plan parses each body once and runs every filter and projection in whole-stage codegen") {
+    // envelopes as the relay spools them, read with the JSON file source
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-shape")
+    val lines = Seq(
+      ("ALOWARE", """{"X-Delivery-Id":"d-1"}""", canonical),
+      ("ALOWARE", "{}", """{"event":"outbound_text","body":{"id":2,"owner_id":12345}}"""),
+      ("ALOWARE", "{}", """{"event":"inbound_call","body":{"id":3,"direction":2,"type":1}}"""),
+      ("HUBSPOT", """{"x-request-id":"r-4"}""", "{}"),
+      ("ALOWARE", "{}", null))
+    val micros = java.time.Instant.parse(recv).toEpochMilli * 1000L
+    java.nio.file.Files.write(dir.resolve("spool.json"), lines.map { case (src, hdrs, body) =>
+      val b = if (body == null) "null" else "\"" + body.replace("\"", "\\\"") + "\""
+      s"""{"source":"$src","headers":$hdrs,"body":$b,"receivedAtMicros":$micros}"""
+    }.mkString("\n").getBytes("UTF-8"))
+    val envelopes = spark.read
+      .schema("source STRING, headers MAP<STRING,STRING>, body STRING, receivedAtMicros BIGINT")
+      .json(dir.toString)
+      .select(col("source"), col("headers"), col("body"),
+        timestamp_micros(col("receivedAtMicros")).as("receivedAt"))
+    val roster = Seq("12345").toDF("id")
+    val gated = RosterGate(Adapters.route(envelopes), Some(roster))
+    // collect the frame itself, so its adaptive plan is the final one
+    gated.collect().map(_.getAs[String]("eventId")).sorted shouldBe
+      Array("ALOWARE:2", "ALOWARE:719285063")
+
+    val plan = gated.queryExecution.executedPlan
+    val expressions = collect(plan) { case n => n.expressions }.flatten
+    expressions.flatMap(_.collect { case j: JsonToStructs => j }) should have size 1
+    expressions.flatMap(_.collect { case h: HigherOrderFunction => h }) shouldBe empty
+
+    // a codegen stage's operators: its subtree down to each InputAdapter
+    def stageOps(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(stageOps)
+    }
+    val inCodegen = collect(plan) { case w: WholeStageCodegenExec => stageOps(w.child) }
+      .flatten.map(System.identityHashCode).toSet
+    val filtersAndProjects = collect(plan) {
+      case f: FilterExec => f: SparkPlan
+      case p: ProjectExec => p: SparkPlan
+    }
+    filtersAndProjects should not be empty
+    filtersAndProjects.filterNot(n => inCodegen(System.identityHashCode(n))) shouldBe empty
   }
 }

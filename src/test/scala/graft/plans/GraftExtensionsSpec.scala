@@ -10,6 +10,7 @@ class GraftExtensionsSpec extends SparkSpec {
   /** One call per function with the right arity (analysis only). */
   private val calls = Map(
     "graft_date_key" -> "graft_date_key(current_timestamp(), 'UTC')",
+    "graft_header_ci" -> "graft_header_ci(map('X-Id', 'v'), 'x-id')",
     "graft_dot" -> "graft_dot(array(1d, 2d), array(3d, 4d))",
     "graft_shingle_hash" -> "graft_shingle_hash('a b c', 2)",
     "graft_minhash" -> "graft_minhash(array(1L, 2L), 4)",
